@@ -107,7 +107,12 @@ def main() -> None:
     budget_sec = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "2100"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # Parsed here, before the sweep: a bad value must not surface only
+    # when the detail file is written, after a full run.
+    cpus_env = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    if not cpus_env.isdigit() or int(cpus_env) < 1:
+        sys.exit(f"bench: SPARK_GRAFT_CPUS must be a positive integer, got {cpus_env!r}")
+    cpus = int(cpus_env)
 
     from target_iceberg_spark.plans import all_specs
     from target_iceberg_spark.session import get_spark
@@ -295,13 +300,18 @@ def main() -> None:
                     file=sys.stderr,
                 )
                 retimed: dict[str, float] = {}
+                incomplete: list[dict[str, str]] = []
                 for n in movers:
                     try:
                         retimed[n] = run_once(specs[n])
-                    except Exception:  # annex must never kill the bench
-                        break
+                    except Exception as exc:  # annex must never kill the bench
+                        incomplete.append({"query": n, "error": f"{type(exc).__name__}: {exc}"})
+                        print(f"bench: in-session re-time of {n} failed: "
+                              f"{incomplete[-1]['error']}", file=sys.stderr)
                 movers_annex["mode"] = "in_session_retime"
                 movers_annex["retime_warm"] = retimed
+                if incomplete:
+                    movers_annex["retime_incomplete"] = incomplete
                 del movers_annex["movers_skipped"]
             else:
                 print(
@@ -353,7 +363,7 @@ def main() -> None:
                                detail_name)
     detail = {
         "sf": sf,
-        "cpus": int(cpus),
+        "cpus": cpus,
         "budget_sec": budget_sec,
         "elapsed_sec": round(time.perf_counter() - t_start, 1),
         "total_cold_sec": total,

@@ -50,7 +50,6 @@ def pagerank(
     teleport: float = 0.15,
     restart: DataFrame | None = None,
     strict_restart: bool = False,
-    rounds_per_checkpoint: int = 1,
 ) -> DataFrame:
     """(node, rank) after ``iterations`` rounds of the weighted power
     method over ``edges``; ranks are full-precision doubles (callers
@@ -121,29 +120,14 @@ def pagerank(
         tele = F.lit(teleport) * F.col("r")
     base = base.localCheckpoint()
     ranks = base.select("node", F.col("r").alias("rank"))
-    # rounds_per_checkpoint: how many propagation rounds to fuse into
-    # one plan before cutting lineage (1 = the classic one-job-per-
-    # round form). Values > 1 halve/third the driver round-trips at
-    # the cost of a deeper adaptive plan per job — measured SLOWER at
-    # fixture scale for both 2 and 3 (see OPTIMIZATION_r14.md; the
-    # round-13 cadence experiment measured the 3 case), so the
-    # default stays 1. Identical arithmetic per round either way —
-    # results are bit-identical for any value.
-    done = 0
-    while done < iterations:
-        in_plan = min(rounds_per_checkpoint, iterations - done)
-        for _ in range(in_plan):
-            mass = (
-                norm.join(ranks, norm.e_src == ranks.node)
-                .groupBy(F.col("e_dst").alias("m_node"))
-                .agg(F.sum(F.col("frac") * F.col("rank")).alias("mass"))
-            )
-            ranks = base.join(mass, base.node == mass.m_node, "left").select(
-                "node",
-                (tele + F.lit(damping) * F.coalesce("mass", F.lit(0.0))).alias(
-                    "rank"
-                ),
-            )
-        ranks = ranks.localCheckpoint()
-        done += in_plan
+    for _ in range(iterations):
+        mass = (
+            norm.join(ranks, norm.e_src == ranks.node)
+            .groupBy(F.col("e_dst").alias("m_node"))
+            .agg(F.sum(F.col("frac") * F.col("rank")).alias("mass"))
+        )
+        ranks = base.join(mass, base.node == mass.m_node, "left").select(
+            "node",
+            (tele + F.lit(damping) * F.coalesce("mass", F.lit(0.0))).alias("rank"),
+        ).localCheckpoint()
     return ranks

@@ -287,43 +287,6 @@ def events_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Retained as documentation: the SQL form the round-14 DataFrame
-# restructure of events_funnel_windowed mirrors bit-for-bit (the four
-# scalar subqueries each re-executed the stage CTEs — see the builder
-# docstring). No longer executed.
-FUNNEL_WINDOWED_SPARK_SQL = """
-WITH s AS (
-    SELECT user_id, MIN(CAST(ts AS TIMESTAMP)) AS s_ts
-    FROM events WHERE event_type = 'signup' GROUP BY user_id
-),
-c AS (
-    SELECT e.user_id, MIN(CAST(e.ts AS TIMESTAMP)) AS c_ts
-    FROM events e JOIN s ON s.user_id = e.user_id
-    WHERE e.event_type = 'click'
-      AND CAST(e.ts AS TIMESTAMP) > s.s_ts
-      AND CAST(e.ts AS TIMESTAMP) <= s.s_ts + INTERVAL 48 HOURS
-    GROUP BY e.user_id
-),
-p AS (
-    SELECT e.user_id, MIN(CAST(e.ts AS TIMESTAMP)) AS p_ts
-    FROM events e JOIN c ON c.user_id = e.user_id
-    WHERE e.event_type = 'purchase'
-      AND CAST(e.ts AS TIMESTAMP) > c.c_ts
-      AND CAST(e.ts AS TIMESTAMP) <= c.c_ts + INTERVAL 48 HOURS
-    GROUP BY e.user_id
-),
-conv AS (
-    SELECT unix_micros(p.p_ts) - unix_micros(s.s_ts) AS dur_us
-    FROM p JOIN s ON p.user_id = s.user_id
-)
-SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM s) AS n_signup,
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM c) AS n_click_48h,
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM p) AS n_purchase_48h,
-       (SELECT CAST(SUM(CAST(dur_us AS DECIMAL(38,0))) div COUNT(*) AS BIGINT)
-        FROM conv) AS avg_conv_us
-"""
-
-
 @register(
     "events_funnel_windowed",
     oracle="""

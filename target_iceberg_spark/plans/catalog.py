@@ -1,9 +1,9 @@
 """Generated query-catalog document (QUERIES.md).
 
-One row per registered query, in REGISTRY ORDER (the first 50 rows are
-exactly the external checker's verification window — see
-tests/test_registry_window.py), with tags, oracle kind, and the first
-docstring line. Regenerate with:
+One row per registered query, in REGISTRY ORDER (derived from the
+CORRECTNESS_r*.json files by ``registry._rank``; the first ``WINDOW``
+rows are the external checker's verification window), with tags,
+oracle kind, and the first docstring line. Regenerate with:
 
     python -m target_iceberg_spark.plans.catalog
 
@@ -19,9 +19,11 @@ from target_iceberg_spark.plans.registry import all_specs
 
 HEADER = """# Query catalog (generated — do not edit)
 
-One row per registered query in REGISTRY ORDER: the first 50 rows are
-exactly the external correctness checker's verification window for the
-current round (ledger: `tests/test_registry_window.py`). Oracle
+One row per registered query in REGISTRY ORDER, derived from the
+external correctness checker's `CORRECTNESS_r*.json` rows: queries
+without current green evidence first, then oldest green evidence first,
+rows-only last. The first 50 rows are the checker's verification window
+for the next round. Oracle
 `hash` = bit-exact DuckDB comparison (row count + schema + value
 hash); `rows-only` = inherently approximate / multi-run / driver-side
 linear algebra, covered instead by dedicated bound/recall/equivalence

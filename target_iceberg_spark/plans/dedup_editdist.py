@@ -1,9 +1,4 @@
-"""Edit-distance dedup verify (SURVEY.md §2B dedup north star).
-
-Separate module from plans/dedup.py so registry import order can keep
-this round-2 query inside the external checker's window while the
-round-1-verified dedup family rotates behind it.
-"""
+"""Edit-distance dedup verify (SURVEY.md §2B dedup north star)."""
 
 from __future__ import annotations
 

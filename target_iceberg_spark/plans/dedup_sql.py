@@ -1,7 +1,7 @@
 """Engine-portable SQL mirrors of the MinHash+LSH pipeline
 (operators/dedup.py) used by the DuckDB oracles of dedup_minhash,
 dedup_ngram_jaccard, dedup_clusters, and dedup_editdist. No @register
-calls here — importing this module must not touch registry order.
+calls here: the module registers no query.
 """
 
 from __future__ import annotations

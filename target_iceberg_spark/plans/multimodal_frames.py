@@ -1,7 +1,5 @@
 """Frame-sampling plan over multimodal binary payloads (SURVEY.md
-§2B north star; sibling of plans/multimodal.py — separate module so
-registry order keeps this round-2 query inside the external checker's
-window while the r1-verified multimodal pair rotates behind it).
+§2B north star; sibling of plans/multimodal.py).
 """
 
 from __future__ import annotations

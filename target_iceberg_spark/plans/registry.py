@@ -27,8 +27,13 @@ Conventions for oracle-stable results:
 
 from __future__ import annotations
 
+import importlib
+import json
+import pkgutil
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -64,324 +69,79 @@ def register(
     return deco
 
 
-def _load_all() -> None:
-    """Import every plan module so decorators run (idempotent).
+# The external checker hashes the first WINDOW entries of the registry
+# each round and records them as CORRECTNESS_r{N}.json. Registry order
+# is derived from those files (see ``_rank``), so queries lacking fresh
+# evidence reach the window with no bookkeeping.
+WINDOW = 50
 
-    Import order IS registry order (dicts preserve insertion), and the
-    external correctness harness checks a bounded prefix of the
-    registry.  Modules are therefore ordered so queries that still lack
-    an external correctness row land first; queries already verified in
-    a prior round rotate to the back (they stay covered by the local
-    oracle-parity suite, tests/test_oracle_parity.py, which runs the
-    identical comparison for every registered query).
+# Queries whose output changed since their last green checker row. The
+# CORRECTNESS files record no hashes, so this is the one input that
+# cannot be derived from them; empty it once the window re-proves them.
+OUTPUT_CHANGED: tuple[str, ...] = ()
+
+_REPO_ROOT = Path(__file__).resolve().parents[2]
+_EVIDENCE_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
+
+
+def _import_plans() -> None:
+    """Import every plan module so its ``@register`` decorators run."""
+    for info in sorted(pkgutil.iter_modules([str(Path(__file__).parent)]), key=lambda m: m.name):
+        if info.name not in ("registry", "catalog"):
+            importlib.import_module(f"{__package__}.{info.name}")
+
+
+def load_evidence(root: Path = _REPO_ROOT) -> dict[int, dict[str, bool]]:
+    """Checker rows per round, ``{round: {name: green}}``, in file order,
+    read from the CORRECTNESS_r*.json files at ``root`` and in
+    ``root/artifacts``. A row is green when rows, schema and value hash
+    all matched."""
+    evidence = {}
+    for path in [*root.glob("CORRECTNESS_r*.json"), *root.glob("artifacts/CORRECTNESS_r*.json")]:
+        m = _EVIDENCE_FILE.fullmatch(path.name)
+        if m:
+            rows = json.loads(path.read_text())
+            evidence[int(m.group(1))] = {
+                name: all(row.get(k) is True for k in ("rows_match", "schema_match", "hash_match"))
+                for name, row in rows.items()
+            }
+    return evidence
+
+
+def _rank(
+    spec: QuerySpec, evidence: dict[int, dict[str, bool]], output_changed: tuple[str, ...]
+) -> tuple[int, int, str]:
+    """Sort key: (tier, newest green round, name).
+
+    0. oracle-backed, newest row failed or never green;
+    1. named in ``output_changed``;
+    2. oracle-backed, by newest green round, oldest first;
+    3. rows-only (the checker cannot hash them), last.
     """
-    # Round-4 window (first 50): the new 22/22-coverage TPC-H tier
-    # (tpch_more) plus everything whose output or plan changed since
-    # its last driver row — all hoisted explicitly below. Everything
-    # else carries a driver-green row from rounds 1-3 and stays covered
-    # by the local oracle-parity suite (tests/test_oracle_parity.py,
-    # the identical comparison for every registered query).
-    from target_iceberg_spark.plans import (  # noqa: F401
-        tpch_more,
-        analytics_extra,
-        aggregates_extra,
-        functions_extra,
-        multimodal,
-        embeddings,
-        dedup,
-        text_extra,
-        similarity,
-        joins,
-        relational_extra,
-        scans,
-        aggregates,
-        functions_scalar,
-        windows,
-        text,
-        udfs,
-        streaming_batch,
-        windows_extra,
-        curation,
-        sketches,
-        skew_join,
-        subqueries,
-        dedup_editdist,
-        multimodal_frames,
-        stream_join,
-        analytics,
-        tpch_composite,
-    )
-    # Session-3 additions land BEHIND the (already exactly full) round-4
-    # checker window ON PURPOSE: they carry local oracle-parity evidence
-    # (tests/test_oracle_parity.py) and are first in line for the
-    # round-5 hoist (see tests/test_registry_window.py NEW_IN_R4_POST_WINDOW).
-    from target_iceberg_spark.plans import (  # noqa: F401
-        analytics_ts,
-        graph,
-        text_chunks,
-        bucketed,
-        cdc,
-        skyline,
-    )
-    # Round-5 additions (all hoisted into the window below).
-    from target_iceberg_spark.plans import (  # noqa: F401
-        analytics_more,
-        corpus_stats,
-        quality_curation,
-        lakehouse,
-        mining,
-    )
-    # Round-5 POST-window additions: registered after the 50-slot
-    # window filled (same rotation pattern as round 4's session-3
-    # tier) — local oracle-parity/property evidence now, first in line
-    # for the round-6 hoist (tests/test_registry_window.py
-    # NEW_IN_R5_POST_WINDOW).
-    from target_iceberg_spark.plans import (  # noqa: F401
-        similarity_mmr,
-        dedup_cdc,
-        feature_store,
-        profiling_extra,
-        quality_robust,
-        matryoshka,
-        stats_inference,
-        gopher_quality,
-        dedup_lines,
-        analytics_smooth,
-        similarity_knn,
-        profiling_rules,
-        joins_interval,
-        similarity_sparse,
-        similarity_binary,
-        dedup_semantic,
-        embeddings_jl,
-        stats_information,
-        graph_core,
-    )
-    # Round-6 additions (hoisted into the window's remaining slots).
-    from target_iceberg_spark.plans import (  # noqa: F401
-        stats_tests,
-        analytics_risk,
-        graph_communities,
-        embeddings_outliers,
-        text_tokenizer,
-    )
-    # Round-6 POST-window additions: registered after the 50-slot
-    # window filled — local oracle-parity/property evidence now,
-    # first in line for the round-7 hoist
-    # (tests/test_registry_window.py NEW_IN_R6_POST_WINDOW).
-    from target_iceberg_spark.plans import (  # noqa: F401
-        corpus_novelty,
-        graph_linkpred,
-        embeddings_drift,
-        analytics_burst,
-        profiling_bloom,
-        profiling_sketch,
-        joins_spatial,
-        text_lm,
-        similarity_mining,
-        analytics_cohort,
-        curation_pii,
-        profiling_layout,
-        text_winnowing,
-        sampling_fixed,
-        features_decay,
-        curation_raking,
-        similarity_eval,
-        multimodal_phash,
-        mining_rules,
-        graph_hits,
-        stats_rank,
-        curation_sweep,
-        similarity_gemm,
-        multimodal_scenes,
-        embeddings_quality,
-        dedup_tuning,
-        graph_assortativity,
-        scans_python,
-    )
-    # Round-7 additions (hoisted into the window's remaining slots).
-    from target_iceberg_spark.plans import (  # noqa: F401
-        stats_experiments,
-        analytics_signal,
-        curation_diversity,
-        joins_bloom,
-        graph_reach,
-        corpus_zipf,
-        features_horizon,
-    )
-    # Round-7 POST-window additions: registered after the 50-slot
-    # window filled — local oracle-parity evidence now, first in line
-    # for the round-8 hoist (tests/test_registry_window.py
-    # NEW_IN_R7_POST_WINDOW).
-    from target_iceberg_spark.plans import (  # noqa: F401
-        text_drift,
-        sql_recursive,
-        dedup_bloom,
-        analytics_overlap,
-        analytics_convert,
-        graph_clustering,
-        multimodal_vad,
-        accounting_decimal,
-        dataset_builder,
-        graph_degrees,
-        profiling_strings,
-        curation_contamination,
-        matryoshka_curve,
-        analytics_slo,
-    )
-    # Round-8 additions (hoisted into the window's remaining slots).
-    from target_iceberg_spark.plans import (  # noqa: F401
-        corpus_zipf_dedup,
-        dedup_substring,
-        curation_privacy,
-        stats_ratio,
-        aggregates_robust,
-        analytics_bots,
-        analytics_markov,
-        stats_bayes,
-        multimodal_audio,
-        profiling_growth,
-        curation_redact,
-        stats_runs,
-        similarity_ivf_curve,
-        functions_collation,
-        stats_equiv,
-        profiling_order,
-    )
-    # Round-9 additions (hoisted into the window's remaining slots).
-    from target_iceberg_spark.plans import (  # noqa: F401
-        stats_sprt,
-        stats_fisher,
-        stats_theilsen,
-        stats_winsor,
-        text_templates,
-        similarity_mutual,
-        embeddings_isotropy,
-        stats_mcnemar,
-        stats_multiplicity,
-        stats_shrinkage,
-        stats_did,
-        analytics_xcorr,
-        analytics_health,
-        graph_adamic,
-        profiling_fds,
-        profiling_selectivity,
-        curation_fertility,
-        analytics_seasonal,
-        text_entropy,
-        windows_pattern,
-        text_keyness,
-        analytics_burstiness,
-        stats_fdr,
-        text_stylometry,
-        similarity_prf,
-    )
-    # Round-10 additions.
-    from target_iceberg_spark.plans import (  # noqa: F401
-        similarity_ivfpq,
-        curation_dsir,
-        stats_contingency,
-        stats_kendall,
-        stats_order_ci,
-        sketches_cm,
-        analytics_changepoint,
-        graph_jaccard,
-        text_kneser_ney,
-        text_nb_classifier,
-        embeddings_whitening,
-        lakehouse_compaction,
-        curation_order,
-        profiling_equidepth,
-        analytics_forecast,
-        curation_card,
-        stats_welch_anova,
-        stats_kappa,
-        eval_auc,
-        eval_calibration,
-        sketches_intersect,
-        scans_corrupt,
-        stats_gmm,
-        graph_ppr,
-        curation_dp,
-        curation_knapsack,
-    )
-    # Round-11 additions.
-    from target_iceberg_spark.plans import (  # noqa: F401
-        quality_trained,
-        text_kn_perplexity,
-        lakehouse_gc,
-        lakehouse_prune,
-        curation_repeat,
-        eval_f1,
-        text_lm_contrast,
-        curation_split_decontam,
-        similarity_filtered,
-        curation_anneal,
-        analytics_holt,
-        events_shapley,
-    )
-    # Round-12 additions.
-    from target_iceberg_spark.plans import (  # noqa: F401
-        curation_reweight,
-        lakehouse_evolution,
-        curation_rho,
-        cdc_ivm,
-        lakehouse_wap,
-    )
-    # Round-13 additions.
-    from target_iceberg_spark.plans import (  # noqa: F401
-        curation_semantic_decontam,
-    )
+    if spec.oracle is None:
+        return (3, 0, spec.name)
+    rows = [(r, evidence[r][spec.name]) for r in sorted(evidence) if spec.name in evidence[r]]
+    green = [r for r, ok in rows if ok]
+    if not green or not rows[-1][1]:
+        return (0, 0, spec.name)
+    if spec.name in output_changed:
+        return (1, 0, spec.name)
+    return (2, green[-1], spec.name)
 
 
-# Hoisted to the front of the registry (ahead of module import order):
-# queries with NO current external driver evidence. Round 13 closed
-# 49/50 green (the one non-green was sim_ann_lsh, `no_oracle` BY
-# DESIGN — a rows-only arm the driver cannot hash) with an empty
-# post-window set, so round 14 starts with a fully free window. Round
-# 14 is an optimization round with NO output changes and NO new
-# queries, so all 50 slots go to EVIDENCE FRESHNESS — the 22
-# oracle-backed rows whose newest driver evidence dates to r04, then
-# the 28 alphabetically-first oracle-backed r05 rows as fill.
-# ROWS-ONLY (oracle=None) entries are EXCLUDED from the window from
-# round 14 on (VERDICT r13 task 2): the driver cannot hash them, so a
-# window slot spent on one is wasted — their evidence is the dedicated
-# bound/recall pytest coverage plus their historical rows-only rows.
-# Everything with a prior driver-green row (CORRECTNESS_r01–r13)
-# rotates behind. The evidence ledger lives in
-# tests/test_registry_window.py.
-_HOIST: tuple[str, ...] = (
-    # -- evidence-freshness rotation (already green; newest driver row
-    #    = r04 — every oracle-backed r04-newest entry) ----------------
-    "dedup_minhash_estimate", "emb_centroid_classify", "emb_kmeans",
-    "emb_quantize_int8", "events_scd2", "fn_bitwise", "fn_interval",
-    "fn_map", "fn_unpivot", "join_null_safe", "multimodal_resize",
-    "profile_columns", "profile_fk_integrity", "scan_orc",
-    "scan_partitioned", "scan_range", "set_ops_all", "sim_ann_rp_batch",
-    "subquery_lateral", "text_perplexity", "text_vocab_coverage",
-    "win_cumulative_share",
-    # -- evidence-freshness fill (newest driver row = r05; evict from
-    #    the END first when a round-14 query needs the slot). Includes
-    #    events_funnel_windowed, whose round-14 restructure keeps the
-    #    output bit-identical (oracle unchanged) — its fresh driver row
-    #    re-proves the equivalence externally. -----------------------
-    "agg_bitmap_distinct", "agg_copurchase", "agg_corr_matrix",
-    "agg_listagg", "cdc_apply_changelog", "cdc_snapshot_diff",
-    "curation_neardup_keepbest", "dedup_keep_best", "dedup_url",
-    "emb_norm_stats", "events_funnel_windowed", "events_gapfill",
-    "events_ohlc", "events_rfm", "events_time_weighted",
-    "events_window_topk", "fn_url", "fn_variant", "graph_also_bought",
-    "graph_triangles", "join_bucketed", "join_shuffle_hash",
-    "multimodal_dedup", "profile_drift_psi", "profile_moments",
-    "rollup_incremental", "sample_weighted", "scan_binaryfile",
-)
+def ordered(
+    specs: dict[str, QuerySpec],
+    evidence: dict[int, dict[str, bool]],
+    output_changed: tuple[str, ...] = OUTPUT_CHANGED,
+) -> dict[str, QuerySpec]:
+    return dict(
+        sorted(specs.items(), key=lambda item: _rank(item[1], evidence, output_changed))
+    )
 
 
 def all_specs() -> dict[str, QuerySpec]:
-    _load_all()
-    hoisted = {n: _REGISTRY[n] for n in _HOIST if n in _REGISTRY}
-    rest = {n: s for n, s in _REGISTRY.items() if n not in hoisted}
-    return {**hoisted, **rest}
+    _import_plans()
+    return ordered(_REGISTRY, load_evidence())
 
 
 def queries() -> dict[str, Builder]:

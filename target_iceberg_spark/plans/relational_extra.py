@@ -407,8 +407,7 @@ def win_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# TPC-H Q3/Q5/Q10 (round-1 green) — rotated behind the checker window;
-# q18 stays in plans/tpch_composite.py inside the window.
+# TPC-H Q3/Q5/Q10; q18 lives in plans/tpch_composite.py.
 from target_iceberg_spark.plans.tpch_composite import _revenue  # noqa: E402
 
 
@@ -548,9 +547,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# sim_cosine_topk / sim_cosine_topk_batch (round-1 green) — rotated
-# behind the checker window; sim_cosine_topk parameterizes its oracle
-# with the shared probe/top-k constants.
+# sim_cosine_topk / sim_cosine_topk_batch; sim_cosine_topk
+# parameterizes its oracle with the shared probe/top-k constants.
 from target_iceberg_spark.functions.vectors import cosine  # noqa: E402
 from target_iceberg_spark.plans.similarity import PROBE_VEC_ID, TOP_K  # noqa: E402
 
@@ -600,9 +598,6 @@ def sim_cosine_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn") <= 5)
         .select("probe_id", "vec_id", "cos_sim")
     )
-
-
-# sim_cosine_topk (round-1 green) — rotated behind the checker window.
 
 
 @register(

@@ -16,11 +16,14 @@ SF_ORACLE = os.environ.get("ENGINE_TEST_SF_DIR", "/root/testdata/sf0.01")
 #
 # Two rules, applied at collection:
 #   1. The full-registry sweeps (oracle parity, cartesian-product and
-#      unpartitioned-window plan audits) stay FAST exactly for the
-#      queries in the driver's current 50-slot verification window —
-#      the same set the driver hashes this round — and are `slow` for
-#      the rest (those carry historical driver-green rows plus the
-#      full-sweep runs recorded each round in OPTIMIZATION_r*.md).
+#      unpartitioned-window plan audits) stay FAST for the queries in
+#      the external checker's current verification window (the
+#      registry's first WINDOW entries, the set it hashes this round)
+#      and for the rows of the newest CORRECTNESS file (the set it
+#      hashed last round, so a query stays in the default run for the
+#      round it rotates out). They are `slow` for the rest, which carry older
+#      checker-green rows plus the full-sweep runs recorded each round
+#      in OPTIMIZATION_r*.md.
 #   2. An explicit list of individually-heavy (>5 s measured) property
 #      and streaming-equivalence tests.
 # ---------------------------------------------------------------------------
@@ -72,9 +75,11 @@ _SLOW_SINGLES = {
 
 
 def _window_names() -> set[str]:
-    from target_iceberg_spark.plans import all_specs
+    from target_iceberg_spark.plans.registry import WINDOW, all_specs, load_evidence
 
-    return set(list(all_specs())[:50])
+    evidence = load_evidence()
+    last_round = set(evidence[max(evidence)]) if evidence else set()
+    return set(list(all_specs())[:WINDOW]) | last_round
 
 
 def pytest_collection_modifyitems(config, items):

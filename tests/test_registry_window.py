@@ -1,702 +1,105 @@
-"""Registry-order invariant: the external checker verifies only the
-FIRST 50 registered queries per round, so every query without a prior
-driver-green correctness row must sit inside that window. This test
-encodes the evidence ledger (updated each round from CORRECTNESS_r*)
-and fails if a registry edit accidentally rotates an unverified query
-out of the window.
-
-ROUND-15 NOTE — do these IN ORDER before registering any new query:
-  1. Fold CORRECTNESS_r14 into this ledger (every green row moves
-     from NEW_IN_R14 into a new ROUND14_GREEN set; any FAIL stays
-     hoisted).
-  2. Rebuild registry._HOIST for round 15: any r14 FAILs first, then
-     whatever is in NEW_IN_R14_POST_WINDOW, then round-15 work that
-     changes outputs, then brand-new round-15 queries.
-  3. Spare window slots go to EVIDENCE FRESHNESS: hoist the
-     ORACLE-BACKED queries whose newest driver row is oldest — after
-     round 14 that is the r05 remainder, then the r06 rows — so no
-     entry's newest driver row ages past ~6 rounds. Compute the queue
-     from this ledger (newest round per name), don't trust prose
-     counts. ROWS-ONLY (oracle=None) entries stay OUT of the window
-     (round-14 rule, from the r13 verdict: the driver cannot hash
-     them, so the slot is wasted — sim_ann_lsh burned one in r13).
-  4. Round-15's own new queries fill whatever window slots remain
-     after the hoist (evict refresh entries from the END of the hoist
-     if a new query needs the slot); overflow goes straight into a
-     NEW_IN_R15_POST_WINDOW set rather than competing for the window,
-     and this file's tests enforce both bookkeeping steps.
+"""Registry order: the external checker hashes the first ``WINDOW``
+registered queries each round and records them as CORRECTNESS_r{N}.json.
+The order is derived from those files by ``registry._rank``; these tests
+check the rule, on synthetic evidence and against the committed rounds.
 """
 
 from __future__ import annotations
 
-from target_iceberg_spark.plans.registry import _HOIST, all_specs
+import json
 
-WINDOW = 50
-
-# Queries WITH a driver-green row from round 1 (CORRECTNESS_r01.json);
-# their rows remain valid while the implementation is unchanged.
-ROUND1_GREEN = {
-    "scan_parquet", "scan_json_props", "project_filter", "sort_limit",
-    "set_union_except", "join_broadcast", "join_sortmerge",
-    "join_left_outer", "join_full_outer", "join_semi", "join_anti",
-    "join_range", "join_asof", "agg_group", "agg_distinct", "agg_salted",
-    "agg_percentile", "agg_stats", "agg_rollup", "agg_cube", "agg_pivot",
-    "subquery_scalar", "q3_shipping_priority",
-    "q5_local_supplier_volume", "q10_returned_items", "win_range_frame",
-    "win_distribution", "fn_string", "fn_date", "fn_math", "fn_array",
-    "fn_json", "fn_conditional", "fn_timestamp", "fn_explode",
-    "dedup_exact", "dedup_keyed", "dedup_minhash", "dedup_ngram_jaccard",
-    "dedup_simhash", "dedup_clusters", "dedup_embedding",
-    "sim_cosine_topk", "sim_cosine_topk_batch", "sim_ann_ivf",
-    "multimodal_meta", "multimodal_decode", "udtf_tokens",
-}
-
-# Driver-green rows from round 2 (CORRECTNESS_r02.json: 47 hash-green
-# plus the rows-only-by-design trio recorded the same round).
-ROUND2_GREEN = {
-    "agg_approx_quantile", "agg_collect", "agg_filter_clause",
-    "agg_grouping_sets", "agg_histogram", "agg_mode",
-    "curation_domain_mix", "curation_mix_temperature",
-    "curation_pack_sequences", "curation_pipeline", "dedup_editdist",
-    "events_anomaly", "events_funnel", "events_retention",
-    "fn_array_setops", "fn_regexp", "join_salted",
-    "multimodal_framesample", "q18_large_orders", "rollup_hypertable",
-    "sample_stratified", "sim_ann_rp", "stream_dedup_first",
-    "stream_join_interval", "stream_session", "stream_sliding",
-    "stream_tumbling", "subquery_exists", "subquery_in",
-    "subquery_not_in", "text_decontaminate", "text_fingerprint",
-    "text_langid", "text_ngram_topk", "text_perplexity", "text_quality",
-    "text_repetition", "text_tfidf", "text_tokens", "text_tokens_regex",
-    "udf_grouped_agg", "udf_scalar", "win_count_distinct",
-    "win_first_last", "win_lag", "win_rank", "win_running_sum",
-    # rows-only by design (no SQL-expressible oracle; driver records a
-    # rows-only row + dedicated bound/recall pytest coverage)
-    "stream_late_data", "sim_ann_lsh",
-}
-
-# Driver rows from round 3 (CORRECTNESS_r03.json: 45 hash-green plus
-# the rows-only-by-design entries recorded the same round).
-ROUND3_GREEN = {
-    "curation_mix_temperature", "q7_volume_shipping", "q8_market_share",
-    "q14_promo_revenue", "emb_centroid_classify", "text_vocab_coverage",
-    "text_scrub", "events_transitions", "curation_quality_resample",
-    "stream_join_left", "q13_customer_distribution", "q15_top_supplier",
-    "q17_small_quantity", "q19_disjunctive", "text_hashing_vectorizer",
-    "scan_jsonl", "scan_csv", "multimodal_decode", "dedup_minhash_capped",
-    "text_pmi_bigrams",
-    # rows-only by design, r3 rows + dedicated pytest coverage
-    "stream_late_data", "sim_ann_pq", "sim_ann_ivf", "sim_ann_lsh",
-}
-
-# Driver rows from round 4 (CORRECTNESS_r04.json: 48/48 hash-green —
-# the full TPC-H completion tier, the session-2 widening, and the five
-# plans re-checked after round-4 rewrites — plus the two declared
-# rows-only ANN rows recorded after their knob changes).
-ROUND4_GREEN = {
-    "q1_pricing_summary", "q2_min_cost_supplier", "q4_order_priority",
-    "q6_revenue_forecast", "q9_product_profit", "q11_important_parts",
-    "q12_ship_speed", "q16_supplier_variety", "q20_promotion_suppliers",
-    "q21_waiting_supplier", "q22_global_sales_opportunity",
-    "emb_kmeans", "curation_split", "sim_ann_rp_batch", "fn_unpivot",
-    "profile_columns", "events_scd2", "dedup_incremental",
-    "events_sessionize_gap", "events_path_topk", "events_active_rolling",
-    "scan_orc", "scan_partitioned", "multimodal_resize",
-    "agg_argmax", "agg_boolean", "agg_regression", "set_ops_all",
-    "fn_bitwise", "agg_heavy_hitters", "fn_interval", "fn_map",
-    "win_cumulative_share", "subquery_lateral", "dedup_containment",
-    "emb_quantize_int8", "events_attribution", "curation_neardup_pipeline",
-    "events_streaks", "events_interarrival", "join_null_safe",
-    "dedup_minhash_estimate", "agg_mom_growth", "profile_fk_integrity",
-    "scan_range", "text_vocab_coverage", "text_perplexity",
-    "emb_centroid_classify",
-    # rows-only by design, r4 rows (post knob change) + recall floors
-    "sim_ann_ivf", "sim_ann_pq",
-}
-
-# Driver rows from round 5 (CORRECTNESS_r05.json: 48/48 hash-green —
-# the round-4 session-3 backlog plus the round-5 window additions —
-# plus the two declared rows-only rows recorded the same round).
-ROUND5_GREEN = {
-    # round-4 post-window backlog
-    "events_gapfill", "events_ohlc", "events_time_weighted",
-    "graph_pagerank", "text_chunk_overlap",
-    "join_bucketed", "scan_binaryfile", "cdc_snapshot_diff",
-    "profile_moments", "dedup_keep_best", "sim_range_search",
-    "skyline_pareto", "text_sentiment", "sim_trajectory_users",
-    "rollup_incremental", "join_shuffle_hash", "agg_listagg",
-    "events_funnel_windowed", "sim_recall_audit", "multimodal_dedup",
-    "scan_federated", "text_bm25", "sim_hybrid_rrf",
-    # new in round 5 (appended as they are registered)
-    "sim_ann_quality", "dedup_url", "curation_token_budget",
-    "curation_neardup_keepbest", "profile_drift_psi",
-    "cdc_apply_changelog", "text_zipf", "emb_norm_stats", "events_rfm",
-    "win_ntile", "agg_corr_matrix", "fn_url", "events_window_topk",
-    "agg_bitmap_distinct", "agg_copurchase", "text_quality_logistic",
-    "text_dup_ngram_fraction", "graph_also_bought",
-    "sim_topk_incremental", "scan_dpp", "scan_merge_schema", "fn_variant",
-    "sample_weighted", "graph_triangles", "text_boilerplate_strip",
-}
-
-# Driver rows from round 6 (CORRECTNESS_r06.json: 48/50 hash-green —
-# the full 41-entry round-5 post-window backlog plus the 9 round-6
-# window additions — plus the two declared rows-only rows recorded
-# the same round; 0 FAILs, fifth consecutive clean round).
-ROUND6_GREEN = {
-    "dedup_cdc_chunks",
-    "join_asof_tolerance",
-    "profile_topk_values",
-    "agg_outlier_mad",
-    "fn_try_arithmetic",
-    "sim_matryoshka_prefix",
-    "profile_entropy",
-    # session 4
-    "agg_ab_test",
-    "agg_weighted_percentile",
-    "agg_max_concurrent",
-    "text_gopher_rules",
-    "text_lexical_diversity",
-    "dedup_lines",
-    "events_ewma",
-    "events_level_shift",
-    "sim_knn_classify",
-    "profile_expectations",
-    "join_interval_overlap",
-    "sim_tfidf_pairs",
-    "join_asof_nearest",
-    "events_seasonal_error",
-    "text_keywords_tfidf",
-    "agg_gini_binned",
-    "curation_corpus_report",
-    "sim_binary_hamming",
-    "events_acf",
-    "agg_benford",
-    "dedup_semantic",
-    "agg_survival_km",
-    "win_rolling_median",
-    "emb_jl_projection",
-    "agg_mutual_info",
-    "text_jsd_sources",
-    "scan_csv_malformed",
-    "scan_json_nested",
-    "fn_lambda",
-    "join_scd2_pit",
-    "graph_kcore",
-    "events_dau_wau",
-    # round-6 additions filling the window's remaining 9 slots
-    "agg_chi_square",
-    "agg_mann_whitney",
-    "agg_bootstrap_ci",
-    "events_cusum",
-    "events_drawdown",
-    "graph_label_propagation",
-    "emb_outliers",
-    "text_bpe_merges",
-    "text_readability",
-}
-
-# Driver rows from round 7 (CORRECTNESS_r07.json: 50/50 hash-green —
-# the full 38-entry round-6 post-window backlog plus the 12 round-7
-# window additions; 0 FAILs, sixth consecutive clean round).
-ROUND7_GREEN = {
-    "agg_ks_test",
-    "text_ngram_novelty",
-    "text_zipf_skewed",
-    "graph_link_prediction",
-    "emb_drift_snapshots",
-    "events_burst",
-    "profile_bloom_fpr",
-    "profile_cms_error",
-    "profile_kmv_jaccard",
-    "join_spatial_grid",
-    "text_bigram_lm",
-    "scan_xml",
-    "graph_modularity",
-    "sim_hard_negatives",
-    "events_cohort_ltv",
-    "curation_pii_audit",
-    "profile_zorder_clustering",
-    "text_winnowing",
-    "sample_fixed_k",
-    "events_decay_features",
-    "curation_ipf_raking",
-    "sim_ndcg_audit",
-    "multimodal_phash_neardup",
-    "sim_hamming_fidelity",
-    "mining_association_rules",
-    "graph_hits",
-    "agg_anova_f",
-    "agg_spearman",
-    "curation_filter_sweep",
-    "events_peaks",
-    "sim_gemm_topk",
-    "curation_upsample_weights",
-    "multimodal_scene_cuts",
-    "emb_silhouette",
-    "dedup_lsh_band_sweep",
-    "curation_filter_overlap",
-    "graph_assortativity",
-    "scan_python_datasource",
-    # -- round-7 additions filling the window's remaining 12 slots ---
-    "agg_cuped",
-    "agg_decile_lift",
-    "agg_cramers_v",
-    "events_entropy_rate",
-    "events_rolling_zscore",
-    "curation_diversity_index",
-    "join_bloom_semi",
-    "graph_khop_reach",
-    "text_bm25_zipf",
-    "sim_tfidf_pairs_zipf",
-    "events_multi_horizon",
-    "profile_key_gaps",
-}
-
-# Driver rows from round 8 (CORRECTNESS_r08.json: 48/50 hash-green —
-# the 15 green round-7 post-window hoists plus 17 round-8 window
-# additions plus 11 rotation re-checks; the 2 non-green were
-# events_sequence_dataset, whose raw array column crashed the driver
-# canonicalizer (fixed in r9 — array serialized in both arms), and
-# sim_ivf_recall_curve, rows-only that round (made hash-checkable in
-# r9 via the invariant audit-row reduction)).
-ROUND8_GREEN = {
-    "agg_bayes_ab", "agg_decimal_ledger", "agg_paired_ttest",
-    "agg_power_mde", "agg_powerlaw_alpha", "agg_ratio_delta",
-    "agg_robust_means", "agg_runs_test", "agg_tost_equivalence",
-    "curation_cross_contamination", "curation_kanonymity",
-    "curation_redact", "dedup_bloom_incremental",
-    "events_active_rolling", "events_attribution", "events_bot_score",
-    "events_markov_stationary", "events_path_topk",
-    "events_sessionize_gap", "events_slo_burn", "events_streaks",
-    "events_time_to_convert", "events_user_overlap", "fn_collation",
-    "graph_clustering_local", "graph_degree_histogram",
-    "multimodal_audio_fingerprint", "multimodal_vad_segments",
-    "profile_ndv_growth", "profile_order_inversions",
-    "profile_string_lengths", "q11_important_parts", "q12_ship_speed",
-    "q16_supplier_variety", "q1_pricing_summary",
-    "q20_promotion_suppliers", "q21_waiting_supplier",
-    "q22_global_sales_opportunity", "q2_min_cost_supplier",
-    "q4_order_priority", "q6_revenue_forecast", "q9_product_profit",
-    "sim_matryoshka_curve", "sql_recursive_hierarchy",
-    "text_dup_ngram_zipf", "text_idf_drift", "text_shared_runs",
-    "text_winnowing_zipf",
-}
-
-# Kept for provenance: the round-8 hoist set (all driver-checked that
-# round; its green rows are folded into ROUND8_GREEN above).
-NEW_IN_R8 = {
-    # -- round-7 post-window backlog (driver evidence owed) ----------
-    "agg_paired_ttest",
-    "text_idf_drift",
-    "sql_recursive_hierarchy",
-    "dedup_bloom_incremental",
-    "events_user_overlap",
-    "events_time_to_convert",
-    "agg_powerlaw_alpha",
-    "graph_clustering_local",
-    "multimodal_vad_segments",
-    "agg_decimal_ledger",
-    "events_sequence_dataset",
-    "graph_degree_histogram",
-    "profile_string_lengths",
-    "curation_cross_contamination",
-    "sim_matryoshka_curve",
-    "events_slo_burn",
-    # -- new in round 8 (window slots) -------------------------------
-    "text_winnowing_zipf",
-    "text_dup_ngram_zipf",
-    "text_shared_runs",
-    "curation_kanonymity",
-    "agg_ratio_delta",
-    "agg_power_mde",
-    "agg_robust_means",
-    "events_bot_score",
-    "events_markov_stationary",
-    "agg_bayes_ab",
-    "multimodal_audio_fingerprint",
-    "profile_ndv_growth",
-    "curation_redact",
-    "agg_runs_test",
-    "fn_collation",
-    "agg_tost_equivalence",
-    "profile_order_inversions",
-    "sim_ivf_recall_curve",  # rows-only by design (seeded k-means
-    # centers; monotone curve + 1.0 exactness endpoint pinned in
-    # tests/test_round8_ops.py)
-}
-
-# Driver rows from round 9 (CORRECTNESS_r09.json: 50/50 hash-green —
-# the r8 canonicalizer fail fixed, the 2 output-changed re-checks,
-# 26 new queries, 5 audit-row reductions, and 16 hoisted spares;
-# 0 FAILs, the first zero-weak round).
-ROUND9_GREEN = {
-    "events_sequence_dataset",  # r8 driver row errored; fix = r9
-    "sim_ivf_recall_curve",  # r9: rows-only -> invariant audit row
-    "events_markov_stationary",  # r9: ADVICE fix changes plan/output
-    # -- new in round 9 (window slots; entries appended as each lands,
-    # keeping this set == registry._HOIST at every commit) ------------
-    "agg_sprt_ab",
-    "agg_fisher_exact",
-    "agg_theil_sen",
-    "agg_winsorized_stats",
-    "text_cross_source_templates",
-    "sim_reciprocal_knn",
-    "emb_isotropy",
-    "agg_mcnemar",
-    "agg_holm_bonferroni",
-    "agg_eb_shrinkage",
-    "agg_diff_in_diff",
-    "events_xcorr",
-    "events_srm",
-    "events_capture_recapture",
-    "graph_adamic_adar",
-    "profile_functional_deps",
-    "profile_selectivity_audit",
-    # -- round-9 audit-row reductions: previously rows-only, output
-    # changed to oracle-hashable invariant rows (VERDICT r8 task 3) --
-    "agg_approx_distinct",
-    "agg_hll_rollup",
-    "emb_pca",
-    "emb_mmr",
-    # -- round-9 batch 7 ----------------------------------------------
-    "curation_tokenizer_fertility",
-    "events_seasonal_strength",
-    "text_char_entropy",
-    "win_match_pattern",
-    "text_keyness_g2",
-    "events_burstiness",
-    "agg_benjamini_hochberg",
-    "text_burrows_delta",
-    "sim_prf_rocchio",
-    "text_compression_ratio",  # r9: rows-only -> audit row (zlib
-    # contract booleans beside the SQL-exact doc count)
-}
-
-# Queries with NO current driver evidence, hoisted for round 10:
-# there is no backlog (round 9 was 50/50 green with an empty
-# post-window set), so the hoist starts with round-10 work that
-# CHANGES a previously-green query's output, then brand-new round-10
-# queries appended as each lands. Keep this set == registry._HOIST
-# at every commit.
-NEW_IN_R10 = {
-    # -- round-10 plan/output changes (driver evidence owed) ----------
-    "text_char_entropy",  # ADVICE r9: empty-doc guard in both arms
-    "text_compression_ratio",  # ADVICE r9: length-aware ratio ceiling
-    "agg_approx_distinct",  # r10: exact arm bounded to md5 quarter
-    "sim_ivf_recall_curve",  # r10 trim: literal rank map, no crossJoin
-    "sim_ann_quality",  # r10: 4th arm (ivfpq) added to the hashed row
-    # -- new in round 10 (appended as each lands) ---------------------
-    "sim_ann_ivfpq",  # rows-only by design (seeded coarse+sub k-means)
-    "curation_dsir",
-    "stream_late_data",  # r10: rows-only -> deterministic final table
-    "agg_chi2_independence",
-    "agg_levene_bf",
-    "agg_kendall_tau",
-    "agg_median_order_ci",
-    "agg_countmin_sketch",
-    "events_changepoint",
-    "graph_neighbor_jaccard",
-    "text_kneser_ney",
-    "text_nb_langid",
-    "emb_whitening",
-    "lakehouse_compaction_plan",
-    "curation_semantic_order",
-    "profile_equidepth_histogram",
-    "events_snaive_backtest",
-    "curation_dataset_card",
-    "agg_welch_anova",
-    "agg_cohens_kappa",
-    "agg_auc_roc",
-    "agg_calibration_ece",
-    "agg_hll_intersection",
-    "scan_jsonl_corrupt",
-    "agg_gmm_em",
-    "graph_ppr",
-    "curation_dp_counts",
-    "curation_mix_knapsack",
-}
-
-# Registered AFTER the round-10 window filled: no driver row yet BY
-# DESIGN — covered by local property/parity tests and first in line
-# for the round-11 hoist.
-NEW_IN_R10_POST_WINDOW: set[str] = set()
-
-# Driver rows from round 10 (CORRECTNESS_r10.json: 49/50 hash-green —
-# the full NEW_IN_R10 hoist plus 17 rotation re-checks — plus the one
-# by-design no_oracle row; 0 FAILs, the second zero-weak round).
-ROUND10_GREEN = {
-    "text_char_entropy", "text_compression_ratio", "agg_approx_distinct",
-    "sim_ivf_recall_curve", "sim_ann_quality", "curation_dsir",
-    "stream_late_data", "agg_chi2_independence", "agg_levene_bf",
-    "agg_kendall_tau", "agg_median_order_ci", "agg_countmin_sketch",
-    "events_changepoint", "graph_neighbor_jaccard", "text_kneser_ney",
-    "text_nb_langid", "emb_whitening", "lakehouse_compaction_plan",
-    "curation_semantic_order", "profile_equidepth_histogram",
-    "events_snaive_backtest", "curation_dataset_card", "agg_welch_anova",
-    "agg_cohens_kappa", "agg_auc_roc", "agg_calibration_ece",
-    "agg_hll_intersection", "scan_jsonl_corrupt", "agg_gmm_em",
-    "graph_ppr", "curation_dp_counts", "curation_mix_knapsack",
-    # rotation re-checks carried in the same r10 window
-    "q1_pricing_summary", "q6_revenue_forecast", "q4_order_priority",
-    "q12_ship_speed", "q9_product_profit", "q11_important_parts",
-    "q16_supplier_variety", "q2_min_cost_supplier",
-    "q20_promotion_suppliers", "q21_waiting_supplier",
-    "q22_global_sales_opportunity", "events_sessionize_gap",
-    "events_path_topk", "events_active_rolling", "events_attribution",
-    "events_streaks", "events_interarrival",
-    # rows-only by design (seeded coarse+sub k-means; recall floor
-    # hashed via sim_ann_quality's green row the same round)
-    "sim_ann_ivfpq",
-}
-
-# Driver rows from round 11 (CORRECTNESS_r11.json: 50/50 hash-green —
-# the 9 round-11 plan/output changes plus 41 evidence-freshness
-# rotations of the oldest r01 rows).
-ROUND11_GREEN = {
-    "graph_ppr", "graph_pagerank", "agg_holm_bonferroni",
-    "agg_benjamini_hochberg", "agg_auc_roc", "text_quality_trained",
-    "text_kn_perplexity", "agg_pr_auc", "lakehouse_snapshot_gc",
-    "agg_cube", "agg_distinct", "agg_group", "agg_percentile",
-    "agg_pivot", "agg_rollup", "agg_salted", "agg_stats",
-    "dedup_clusters", "dedup_embedding", "dedup_exact", "dedup_keyed",
-    "dedup_minhash", "dedup_ngram_jaccard", "dedup_simhash", "fn_array",
-    "fn_conditional", "fn_date", "fn_explode", "fn_json", "fn_math",
-    "fn_string", "fn_timestamp", "join_anti", "join_asof",
-    "join_broadcast", "join_full_outer", "join_left_outer", "join_range",
-    "join_semi", "join_sortmerge", "multimodal_meta", "project_filter",
-    "q10_returned_items", "q3_shipping_priority",
-    "q5_local_supplier_volume", "scan_json_props", "scan_parquet",
-    "set_union_except", "sim_cosine_topk", "sim_cosine_topk_batch",
-}
-
-# Round-12 hoist == registry._HOIST at every commit. Composition
-# (per the round-12 procedure, commit d09beee): no r11 FAILs, so the
-# hoist is
-#   (a) the 13-entry round-11 post-window set — 10 new queries + the
-#       3 plan-only rewrites (emb_outliers, curation_token_budget,
-#       curation_pack_sequences), each owed its first/fresh driver row,
-#   (b) new round-12 queries appended as each lands,
-#   (c) EVIDENCE-FRESHNESS rotation — the 5 remaining round-1 rows
-#       plus the oldest round-2 rows (VERDICT r11 task 2); already
-#       green, the slots are simply spare; evicted from the END as
-#       round-12 queries land.
-NEW_IN_R12 = {
-    # -- (a) round-11 post-window set: first driver evidence owed -----
-    "emb_outliers", "curation_token_budget", "curation_pack_sequences",
-    "lakehouse_scan_prune", "curation_repetition_schedule",
-    "eval_macro_f1", "text_lm_contrast", "curation_split_decontam",
-    "sim_filtered_topk", "curation_mix_anneal", "events_holt_trend",
-    "events_shapley_attribution", "agg_quantile_sketch_audit",
-    # -- round-12 plan/output changes (driver evidence owed) ----------
-    "text_nb_langid",  # r12: per-(doc,tok) count pre-agg + conf
-    # localCheckpoint (kills the orderBy-sampling double execution)
-    "join_salted",  # r12: exact-int dim average + portable FLOOR round
-    "win_rolling_median",  # r12: same exact-int + portable-round fix
-    "agg_tost_equivalence",  # r12: exact cent sufficient statistics
-    # -- (b) new in round 12 (appended as each lands) ------------------
-    "curation_domain_reweight",  # DoReMi EG mixture reweighting
-    "lakehouse_partition_evolution",  # day->month spec-change planner
-    "curation_rho_loss",  # RHO-LOSS reducible-holdout-loss selection
-    "cdc_incremental_agg",  # IVM delta maintenance + recompute audit
-    "lakehouse_wap_audit",  # write-audit-publish gate
-    # -- (c) evidence-freshness rotation: newest driver row = r01/r02 --
-    "sort_limit", "subquery_scalar", "udtf_tokens", "win_distribution",
-    "win_range_frame",
-    "agg_approx_quantile", "agg_collect", "agg_filter_clause",
-    "agg_grouping_sets", "agg_histogram", "agg_mode",
-    "curation_domain_mix", "curation_pipeline", "dedup_editdist",
-    "events_anomaly", "events_funnel", "events_retention",
-    "fn_array_setops", "fn_regexp",
-    "multimodal_framesample", "q18_large_orders", "rollup_hypertable",
-    "sample_stratified", "sim_ann_rp", "stream_dedup_first",
-    "stream_join_interval", "stream_session", "stream_sliding",
-}
-
-# Registered AFTER the round-12 window filled: no driver row yet BY
-# DESIGN — covered by local property/parity tests and first in line
-# for the round-13 hoist.
-NEW_IN_R12_POST_WINDOW: set[str] = set()
-
-# Driver rows from round 12 (CORRECTNESS_r12.json: 50/50 hash-green —
-# the full 22-entry NEW_IN_R12 evidence block (13 r11 post-window
-# hoists, 4 plan/output re-checks, 5 new round-12 queries) plus 28
-# evidence-freshness rotations; 0 FAILs, fourth consecutive clean
-# round).
-ROUND12_GREEN = {
-    "agg_approx_quantile", "agg_collect", "agg_filter_clause",
-    "agg_grouping_sets", "agg_histogram", "agg_mode",
-    "agg_quantile_sketch_audit", "agg_tost_equivalence",
-    "cdc_incremental_agg", "curation_domain_mix",
-    "curation_domain_reweight", "curation_mix_anneal",
-    "curation_pack_sequences", "curation_pipeline",
-    "curation_repetition_schedule", "curation_rho_loss",
-    "curation_split_decontam", "curation_token_budget",
-    "dedup_editdist", "emb_outliers", "eval_macro_f1", "events_anomaly",
-    "events_funnel", "events_holt_trend", "events_retention",
-    "events_shapley_attribution", "fn_array_setops", "fn_regexp",
-    "join_salted", "lakehouse_partition_evolution",
-    "lakehouse_scan_prune", "lakehouse_wap_audit",
-    "multimodal_framesample", "q18_large_orders", "rollup_hypertable",
-    "sample_stratified", "sim_ann_rp", "sim_filtered_topk",
-    "sort_limit", "stream_dedup_first", "stream_join_interval",
-    "stream_session", "stream_sliding", "subquery_scalar",
-    "text_lm_contrast", "text_nb_langid", "udtf_tokens",
-    "win_distribution", "win_range_frame", "win_rolling_median",
-}
-
-# Round-13 hoist == registry._HOIST at every commit. Composition (per
-# the round-13 procedure note above, executed this round): no r12
-# FAILs and an empty r12 post-window set, so the hoist is
-#   (a) round-13 work that changes a previously-green query's output
-#       (lakehouse_wap_audit — portable-rounding ADVICE fix),
-#   (b) new round-13 queries appended as each lands,
-#   (c) EVIDENCE-FRESHNESS rotation — all 20 r02 rows, all 19 r03
-#       rows, then the 10 alphabetically-first r04 rows as fill;
-#       already green, the slots are simply spare; evicted from the
-#       END as round-13 queries land.
-NEW_IN_R13 = {
-    # -- (a) round-13 plan/output changes (driver evidence owed) ------
-    "lakehouse_wap_audit",  # r13: portable FLOOR round on drift ratio
-    # -- (b) new in round 13 (appended as each lands) -----------------
-    "curation_semantic_decontam",  # embedding-level eval decontam
-    # -- (c) evidence-freshness rotation: newest driver row = r02 -----
-    "stream_tumbling", "subquery_exists", "subquery_in",
-    "subquery_not_in", "text_decontaminate", "text_fingerprint",
-    "text_langid", "text_ngram_topk", "text_quality", "text_repetition",
-    "text_tfidf", "text_tokens", "text_tokens_regex", "udf_grouped_agg",
-    "udf_scalar", "win_count_distinct", "win_first_last", "win_lag",
-    "win_rank", "win_running_sum",
-    # -- (c) newest driver row = r03 ----------------------------------
-    "curation_mix_temperature", "curation_quality_resample",
-    "dedup_minhash_capped", "events_transitions", "multimodal_decode",
-    "q13_customer_distribution", "q14_promo_revenue", "q15_top_supplier",
-    "q17_small_quantity", "q19_disjunctive", "q7_volume_shipping",
-    "q8_market_share", "scan_csv", "scan_jsonl", "sim_ann_lsh",
-    "stream_join_left", "text_hashing_vectorizer", "text_pmi_bigrams",
-    "text_scrub",
-    # -- (c) newest driver row = r04 fill (evicted from the END first)
-    "agg_argmax", "agg_boolean", "agg_heavy_hitters", "agg_mom_growth",
-    "agg_regression", "curation_neardup_pipeline", "curation_split",
-    "dedup_containment", "dedup_incremental",
-}
-
-# Registered AFTER the round-13 window filled: no driver row yet BY
-# DESIGN — covered by local property/parity tests and first in line
-# for the round-14 hoist.
-NEW_IN_R13_POST_WINDOW: set[str] = set()
-
-# Driver rows from round 13 (CORRECTNESS_r13.json: 49/50 hash-green —
-# the full NEW_IN_R13 hoist minus sim_ann_lsh, whose slot produced
-# `no_oracle` BY DESIGN (rows-only arm, 2322 rows returned; its
-# standing remains the r02/r03 rows-only rows + dedicated recall
-# pytest coverage). 0 FAILs.)
-ROUND13_GREEN = {
-    "agg_argmax", "agg_boolean", "agg_heavy_hitters", "agg_mom_growth",
-    "agg_regression", "curation_mix_temperature",
-    "curation_neardup_pipeline", "curation_quality_resample",
-    "curation_semantic_decontam", "curation_split", "dedup_containment",
-    "dedup_incremental", "dedup_minhash_capped", "events_transitions",
-    "lakehouse_wap_audit", "multimodal_decode",
-    "q13_customer_distribution", "q14_promo_revenue", "q15_top_supplier",
-    "q17_small_quantity", "q19_disjunctive", "q7_volume_shipping",
-    "q8_market_share", "scan_csv", "scan_jsonl", "stream_join_left",
-    "stream_tumbling", "subquery_exists", "subquery_in",
-    "subquery_not_in", "text_decontaminate", "text_fingerprint",
-    "text_hashing_vectorizer", "text_langid", "text_ngram_topk",
-    "text_pmi_bigrams", "text_quality", "text_repetition", "text_scrub",
-    "text_tfidf", "text_tokens", "text_tokens_regex", "udf_grouped_agg",
-    "udf_scalar", "win_count_distinct", "win_first_last", "win_lag",
-    "win_rank", "win_running_sum",
-}
-
-# Round-14 hoist == registry._HOIST at every commit. Composition (per
-# the round-14 procedure note above, executed this round): no r13
-# FAILs, an empty r13 post-window set, no round-14 output changes and
-# no new queries (optimization round), so all 50 slots are EVIDENCE-
-# FRESHNESS rotation — the 22 oracle-backed rows whose newest driver
-# row is r04, then the 28 alphabetically-first oracle-backed r05 rows.
-# Rows-only (oracle=None) entries are excluded from the window from
-# this round on (r13 verdict task 2). events_funnel_windowed (an r05
-# freshness entry) was restructured this round with bit-identical
-# output — its fresh driver row re-proves the equivalence externally.
-NEW_IN_R14 = {
-    # -- evidence-freshness rotation: newest driver row = r04 ---------
-    "dedup_minhash_estimate", "emb_centroid_classify", "emb_kmeans",
-    "emb_quantize_int8", "events_scd2", "fn_bitwise", "fn_interval",
-    "fn_map", "fn_unpivot", "join_null_safe", "multimodal_resize",
-    "profile_columns", "profile_fk_integrity", "scan_orc",
-    "scan_partitioned", "scan_range", "set_ops_all", "sim_ann_rp_batch",
-    "subquery_lateral", "text_perplexity", "text_vocab_coverage",
-    "win_cumulative_share",
-    # -- evidence-freshness fill: newest driver row = r05 -------------
-    "agg_bitmap_distinct", "agg_copurchase", "agg_corr_matrix",
-    "agg_listagg", "cdc_apply_changelog", "cdc_snapshot_diff",
-    "curation_neardup_keepbest", "dedup_keep_best", "dedup_url",
-    "emb_norm_stats", "events_funnel_windowed", "events_gapfill",
-    "events_ohlc", "events_rfm", "events_time_weighted",
-    "events_window_topk", "fn_url", "fn_variant", "graph_also_bought",
-    "graph_triangles", "join_bucketed", "join_shuffle_hash",
-    "multimodal_dedup", "profile_drift_psi", "profile_moments",
-    "rollup_incremental", "sample_weighted", "scan_binaryfile",
-}
-
-# Registered AFTER the round-14 window filled: no driver row yet BY
-# DESIGN — covered by local property/parity tests and first in line
-# for the round-15 hoist.
-NEW_IN_R14_POST_WINDOW: set[str] = set()
-
-GREEN = (
-    ROUND1_GREEN | ROUND2_GREEN | ROUND3_GREEN | ROUND4_GREEN
-    | ROUND5_GREEN | ROUND6_GREEN | ROUND7_GREEN | ROUND8_GREEN
-    | ROUND9_GREEN | ROUND10_GREEN | ROUND11_GREEN | ROUND12_GREEN
-    | ROUND13_GREEN
+from target_iceberg_spark.plans.registry import (
+    OUTPUT_CHANGED,
+    WINDOW,
+    QuerySpec,
+    _rank,
+    all_specs,
+    load_evidence,
+    ordered,
 )
 
 
-def test_unverified_queries_inside_checker_window():
-    names = list(all_specs())
-    assert len(names) >= WINDOW
-    outside = [
-        n
-        for n in names[WINDOW:]
-        if n not in GREEN and n not in NEW_IN_R14_POST_WINDOW
-    ]
-    assert not outside, (
-        f"queries without current driver-green evidence rotated out of "
-        f"the {WINDOW}-entry checker window: {outside}"
-    )
+def _spec(name: str, oracle: str | None = "SELECT 1") -> QuerySpec:
+    return QuerySpec(name, lambda spark, sf_dir: None, oracle)
+
+
+def _order(names_oracle: dict[str, bool], evidence, output_changed=()) -> list[str]:
+    specs = {n: _spec(n, "SELECT 1" if has else None) for n, has in names_oracle.items()}
+    return list(ordered(specs, evidence, output_changed))
+
+
+def test_backtest_reproduces_the_committed_window():
+    # The rule applied to rounds 1-13 picks exactly the queries, in
+    # exactly the order, the checker hashed in round 14.
+    evidence = load_evidence()
+    before = {r: rows for r, rows in evidence.items() if r < 14}
+    derived = list(ordered(all_specs(), before))[:WINDOW]
+    assert derived == list(evidence[14])
 
 
 def test_unevidenced_queries_are_hoisted():
-    assert set(NEW_IN_R14) == set(_HOIST)
-    names = list(all_specs())[:WINDOW]
-    missing = set(NEW_IN_R14) - set(names)
-    assert not missing, f"unevidenced queries outside the window: {missing}"
+    # Tier 0: never green, or the newest row failed, leads everything.
+    evidence = {1: {"a_old": True, "b_fixed": False, "c_broke": True},
+                2: {"b_fixed": True, "c_broke": False, "d_rows_only": False}}
+    names = {"a_old": True, "b_fixed": True, "c_broke": True,
+             "d_rows_only": False, "e_new": True}
+    assert _order(names, evidence) == ["c_broke", "e_new", "a_old", "b_fixed", "d_rows_only"]
 
 
-def test_hoist_fits_checker_window():
-    assert len(_HOIST) <= WINDOW, (
-        f"hoist has {len(_HOIST)} entries but the checker only reads "
-        f"the first {WINDOW}; evict freshness-rotation entries from the "
-        f"end of the hoist"
-    )
+def test_output_changed_follows_failures():
+    evidence = {1: {"a": True, "b": True}, 2: {"c": True}}
+    names = {"a": True, "b": True, "c": True, "z_new": True}
+    assert _order(names, evidence, ("c",)) == ["z_new", "c", "a", "b"]
+
+
+def test_green_queries_rotate_oldest_evidence_first():
+    # Newest green round decides, not the first one; name breaks ties.
+    evidence = {1: {"a": True, "b": True, "c": True}, 2: {"b": True}, 3: {"a": True, "d": True}}
+    names = {"a": True, "b": True, "c": True, "d": True}
+    assert _order(names, evidence) == ["c", "b", "a", "d"]
+
+
+def test_rows_only_queries_sort_last():
+    names = {"a_rows": False, "b": True}
+    assert _order(names, {}) == ["b", "a_rows"]
+    assert _rank(_spec("a_rows", None), {1: {"a_rows": True}}, ("a_rows",))[0] == 3
+
+
+def test_evidence_reader_requires_all_three_matches(tmp_path):
+    row = {"rows_match": True, "schema_match": True, "hash_match": True}
+    (tmp_path / "artifacts").mkdir()
+    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps(
+        {"b": row, "a": {**row, "hash_match": False}}))
+    (tmp_path / "artifacts" / "CORRECTNESS_r01.json").write_text(json.dumps(
+        {"c": {"rows_match": None, "schema_match": None, "hash_match": None}}))
+    (tmp_path / "CORRECTNESS_r03_partial.json").write_text("{}")
+    evidence = load_evidence(tmp_path)
+    assert evidence == {1: {"c": False}, 2: {"b": True, "a": False}}
+    assert list(evidence[2]) == ["b", "a"]
+
+
+def test_unverified_queries_inside_checker_window():
+    # Every query lacking current evidence (tiers 0-1) is inside the
+    # window, unless such queries fill it; the overflow leads the next
+    # round's window.
+    specs = all_specs()
+    evidence = load_evidence()
+    names = list(specs)
+    unverified = [n for n in names if _rank(specs[n], evidence, OUTPUT_CHANGED)[0] < 2]
+    assert names[: len(unverified)] == unverified
+    assert len(names) >= WINDOW
 
 
 def test_no_rows_only_entries_in_window():
-    # r13 verdict task 2: a rows-only (oracle=None) query in the
-    # first-50 window produces a `no_oracle` driver row — a wasted
-    # slot. The window must be oracle-backed end to end.
+    # A rows-only (oracle=None) query in the window produces a
+    # `no_oracle` checker row: a slot the checker cannot hash.
     specs = all_specs()
-    names = list(specs)[:WINDOW]
-    rows_only = [n for n in names if specs[n].oracle is None]
-    assert not rows_only, (
-        f"rows-only (oracle=None) queries occupy checker-window slots "
-        f"the driver cannot hash: {rows_only}"
-    )
+    rows_only = [n for n in list(specs)[:WINDOW] if specs[n].oracle is None]
+    assert not rows_only, f"rows-only queries occupy checker-window slots: {rows_only}"
 
 
-def test_every_registered_query_has_ledger_standing():
-    # Every query is either previously driver-green or hoisted this
-    # round — nothing can be registered without ledger bookkeeping.
-    names = set(all_specs())
-    unaccounted = names - GREEN - set(NEW_IN_R14) - NEW_IN_R14_POST_WINDOW
-    assert not unaccounted, f"queries missing from the evidence ledger: {unaccounted}"
+def test_output_changed_fits_checker_window():
+    specs = all_specs()
+    unknown = [n for n in OUTPUT_CHANGED if n not in specs]
+    assert not unknown, f"OUTPUT_CHANGED names no registered query: {unknown}"
+    assert len(OUTPUT_CHANGED) <= WINDOW

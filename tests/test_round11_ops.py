@@ -298,10 +298,7 @@ def test_lm_contrast_detects_planted_independence(spark):
     evaluated against itself)."""
     import duckdb
 
-    from target_iceberg_spark.plans.registry import _REGISTRY, _load_all
-
-    _load_all()
-    sql = _REGISTRY["text_lm_contrast"].oracle
+    sql = all_specs()["text_lm_contrast"].oracle
 
     def run(docs):
         con = duckdb.connect()
