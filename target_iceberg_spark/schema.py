@@ -131,7 +131,8 @@ def _field_type(prop: dict[str, Any], level: int, name: str) -> tuple[DataType, 
         # reference (iceberg.py:29-33 retains only string/null members):
         # string is the only type every member's values can carry —
         # picking e.g. LongType for anyOf:[integer,string] would fail
-        # createDataFrame on string-valued records.
+        # the drain on string-valued records, while a string slot
+        # stores any scalar as its text (sources/singer.py::_coerce_value).
         t = "string"
     else:
         t = concrete[0]  # first concrete type wins, matching iceberg.py:33/76+

@@ -12,8 +12,10 @@ Two ingestion paths, same semantics:
   * :class:`SingerTarget` — the parity path. A driver-side listen loop:
     demux messages per stream, buffer up to ``max_batch_size`` records,
     drain each full buffer (and all buffers at STATE/EOF) through the
-    writer as one Spark batch. Matches the reference's lifecycle
-    (SURVEY §3) including at-least-once STATE emission.
+    writer as one Spark batch, handed over as one ``pyarrow.Table``
+    (the reference's ``pa.Table.from_pylist``, sinks.py:82). Matches
+    the reference's lifecycle (SURVEY §3) including at-least-once STATE
+    emission.
 
   * :func:`demux_singer_file` — the scale path the reference lacks.
     For bulk backfills (a 100 TB pile of Singer JSONL on object
@@ -32,9 +34,22 @@ from dataclasses import dataclass, field
 from datetime import date, datetime, timezone
 from typing import Any
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import DataType, DateType, StructType, TimestampType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DataType,
+    DateType,
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from target_iceberg_spark.bounded import bounded_collect
 from target_iceberg_spark.schema import json_schema_to_struct_type
@@ -43,26 +58,83 @@ from target_iceberg_spark.writer import StreamWriter
 DEFAULT_MAX_BATCH_SIZE = 10_000  # reference sinks.py:18
 
 
-def _coerce_value(value: Any, dtype: DataType) -> Any:
-    """Parse ISO strings into temporal types for createDataFrame (the
-    reference gets this via pyarrow's string->timestamp cast in
-    ``pa.Table.from_pylist``, sinks.py:82)."""
+def _parse_timestamp(value: str) -> datetime:
+    """ISO-8601 -> naive UTC datetime. The Arrow timestamp columns are
+    ``timestamp[us, UTC]``, which reads naive values as UTC, so the
+    stored instant never depends on the host's time zone."""
+    dt = datetime.fromisoformat(value.replace("Z", "+00:00"))
+    if dt.tzinfo is not None:
+        dt = dt.astimezone(timezone.utc).replace(tzinfo=None)
+    return dt
+
+
+def _coerce_value(value: Any, dtype: DataType, name: str) -> Any:
+    """Turn one JSON value into what ``pa.Table.from_pylist`` stores
+    under ``dtype``'s Arrow type, or raise. Recurses into structs and
+    array elements.
+
+    ISO strings become dates and timestamps (the reference gets this
+    from pyarrow's string->timestamp cast, sinks.py:82). Other values
+    keep the rules the row-wise ``createDataFrame`` verifier enforced,
+    since pyarrow alone would store some of them silently:
+
+      * a non-string scalar in a string slot is stored as ``str(v)``,
+        bools as ``'true'``/``'false'``;
+      * an integer slot takes only ints (pyarrow truncates 3.5 to 3),
+        a number slot ints and floats (a JSON ``5`` is ``5.0``) but not
+        bools, a boolean slot only bools;
+      * a temporal slot takes only strings (pyarrow reads an int as an
+        epoch offset), an array slot only lists (pyarrow splits a
+        string into characters).
+
+    Integers outside int64 are left to pyarrow, and None in a
+    non-nullable slot to ``createDataFrame``'s cast to the Spark
+    schema; both raise."""
     if value is None:
         return None
-    if isinstance(dtype, TimestampType) and isinstance(value, str):
-        dt = datetime.fromisoformat(value.replace("Z", "+00:00"))
-        if dt.tzinfo is not None:  # normalize to UTC naive (session tz is UTC)
-            dt = dt.astimezone(timezone.utc).replace(tzinfo=None)
-        return dt
-    if isinstance(dtype, DateType) and isinstance(value, str):
-        return date.fromisoformat(value)
-    if isinstance(dtype, StructType) and isinstance(value, dict):
-        return {f.name: _coerce_value(value.get(f.name), f.dataType) for f in dtype.fields}
-    return value
+    kind, vtype = type(dtype), type(value)
+    if kind is StringType:
+        if vtype is str:
+            return value
+        return ("true" if value else "false") if vtype is bool else str(value)
+    if kind is LongType:
+        if vtype is int:
+            return value
+    elif kind is DoubleType:
+        if vtype is float:
+            return value
+        if vtype is int:
+            return float(value)
+    elif kind is BooleanType:
+        if vtype is bool:
+            return value
+    elif kind is TimestampType:
+        if vtype is str:
+            return _parse_timestamp(value)
+    elif kind is DateType:
+        if vtype is str:
+            return date.fromisoformat(value)
+    elif kind is StructType:
+        if vtype is dict:
+            return _coerce_record(value, dtype)
+        if vtype in (list, tuple) and len(value) == len(dtype.fields):
+            # positional, as the row verifier accepted
+            return _coerce_record(dict(zip(dtype.names, value)), dtype)
+    elif kind is ArrayType:
+        if vtype in (list, tuple):
+            return [_coerce_value(v, dtype.elementType, name) for v in value]
+    else:
+        return value
+    raise TypeError(
+        f"field {name!r}: {dtype.simpleString()} can not accept {value!r} ({vtype.__name__})"
+    )
 
 
 def _coerce_record(record: dict[str, Any], schema: StructType) -> dict[str, Any]:
-    return {f.name: _coerce_value(record.get(f.name), f.dataType) for f in schema.fields}
+    return {
+        f.name: _coerce_value(record.get(f.name), f.dataType, f.name)
+        for f in schema.fields
+    }
 
 
 @dataclass
@@ -73,13 +145,21 @@ class _StreamState:
     name: str
     schema: StructType
     key_properties: list[str]
+    # raw RECORD payloads; coerced when drained
     buffer: list[dict[str, Any]] = field(default_factory=list)
-    # per-record time_extracted, parallel to buffer (None when absent)
-    extracted: list[datetime | None] = field(default_factory=list)
+    # per-record raw time_extracted, parallel to buffer (None when absent)
+    extracted: list[Any] = field(default_factory=list)
     records_written: int = 0
     batches_written: int = 0
     version: int | None = None  # Singer table version (ACTIVATE_VERSION)
     wrote_untagged: bool = False  # batches drained before any version known
+
+    def __post_init__(self) -> None:
+        self.set_schema(self.schema)
+
+    def set_schema(self, schema: StructType) -> None:
+        self.schema = schema
+        self.arrow_schema = to_arrow_schema(schema)
 
 
 class SingerTarget:
@@ -155,7 +235,7 @@ class SingerTarget:
             # then swap schema/keys in place, keeping sync progress.
             if existing.buffer:
                 self._drain(existing)
-            existing.schema = schema
+            existing.set_schema(schema)
             existing.key_properties = key_properties
             return
         self.streams[name] = _StreamState(
@@ -169,13 +249,10 @@ class SingerTarget:
         stream = self.streams[name]
         if msg.get("version") is not None:
             stream.version = int(msg["version"])
-        stream.buffer.append(_coerce_record(msg["record"], stream.schema))
+        stream.buffer.append(msg["record"])
         # RECORD's optional time_extracted feeds _sdc_extracted_at
         # (SDK metadata, SURVEY §2 A12) when the writer stamps metadata
-        te = msg.get("time_extracted")
-        stream.extracted.append(
-            _coerce_value(te, TimestampType()) if isinstance(te, str) else None
-        )
+        stream.extracted.append(msg.get("time_extracted"))
         if len(stream.buffer) >= self.max_batch_size:
             self._drain(stream)
 
@@ -201,11 +278,9 @@ class SingerTarget:
         self._drain(stream)
         if stream.wrote_untagged:
             return  # ambiguous history — keep data, don't guess
-        try:
-            cols = self.writer.read(stream.name).columns
-        except Exception:
+        if not self.writer.table_exists(stream.name):
             return  # nothing on disk yet
-        if "_sdc_table_version" not in cols:
+        if "_sdc_table_version" not in self.writer.read(stream.name).columns:
             return  # pre-existing unversioned table — keep data
         self.writer.delete_where(
             stream.name, f"_sdc_table_version < {version}"
@@ -275,33 +350,40 @@ class SingerTarget:
         stream.batches_written += 1
 
     def _drain(self, stream: _StreamState) -> None:
+        """Write the buffer as one batch. Coercion, the Arrow table and
+        the write all happen here, so any failure leaves the buffer in
+        place for a retry (at-least-once, never silent loss)."""
         if not stream.buffer:
             return
+        schema = stream.schema
+        table = pa.Table.from_pylist(
+            [_coerce_record(r, schema) for r in stream.buffer], schema=stream.arrow_schema
+        )
         add_meta = getattr(self.writer.config, "add_record_metadata", False)
-        if add_meta and any(e is not None for e in stream.extracted):
+        stamp = add_meta and any(e is not None for e in stream.extracted)
+        if stamp:
             # attach per-record time_extracted; records lacking it get
             # the drain time (the SDK's `time_extracted or now` default)
-            from pyspark.sql.types import StructField
-
-            schema = StructType(
-                list(stream.schema.fields)
-                + [StructField("_sdc_extracted_at", TimestampType(), True)]
-            )
-            rows = [
-                {**r, "_sdc_extracted_at": e}
-                for r, e in zip(stream.buffer, stream.extracted)
+            extracted = [
+                _parse_timestamp(e) if isinstance(e, str) else None
+                for e in stream.extracted
             ]
-            df = self.spark.createDataFrame(rows, schema=schema).withColumn(
+            # timestamp[us, UTC] reads the naive UTC values as UTC
+            table = table.append_column(
+                "_sdc_extracted_at", pa.array(extracted, pa.timestamp("us", tz="UTC"))
+            )
+            schema = StructType(
+                [*schema.fields, StructField("_sdc_extracted_at", TimestampType(), True)]
+            )
+        # a pa.Table always crosses to the JVM as Arrow record batches
+        df = self.spark.createDataFrame(table, schema=schema)
+        if stamp:
+            df = df.withColumn(
                 "_sdc_extracted_at",
                 F.coalesce(F.col("_sdc_extracted_at"), F.current_timestamp()),
             )
-        else:
-            df = self.spark.createDataFrame(stream.buffer, schema=stream.schema)
-        n = len(stream.buffer)
-        # clear the buffer only AFTER the write succeeds: a transient
-        # write failure must leave the records buffered so the caller
-        # can retry the drain (at-least-once, never silent loss)
-        self._write_df(stream, df, n)
+        self._write_df(stream, df, len(stream.buffer))
+        # cleared only AFTER the write succeeds
         stream.buffer = []
         stream.extracted = []
 

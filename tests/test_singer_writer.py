@@ -449,3 +449,78 @@ def test_drain_preserves_buffer_when_write_fails(spark, tmp_path):
     target._drain(stream)  # retry succeeds
     assert len(stream.buffer) == 0
     assert {r["id"] for r in writer.read("users").collect()} == {1}
+
+
+def test_integral_value_in_number_field_is_stored_as_double(spark, writer):
+    """JSON cannot tell 5 from 5.0: an int in a ``number`` field is a
+    double, as the reference's pyarrow conversion stores it."""
+    schema = {
+        "type": "SCHEMA",
+        "stream": "scores",
+        "key_properties": ["id"],
+        "schema": {
+            "properties": {
+                "id": {"type": ["integer"]},
+                "score": {"type": ["number", "null"]},
+            }
+        },
+    }
+    lines = [json.dumps(schema), _record("scores", id=1, score=5), _record("scores", id=2, score=2.5)]
+    SingerTarget(spark, writer).run(lines)
+    rows = {r["id"]: r["score"] for r in writer.read("scores").collect()}
+    assert rows == {1: 5.0, 2: 2.5}
+    assert isinstance(rows[1], float)
+
+
+def test_timestamps_are_utc_whatever_the_host_zone(spark, tmp_path):
+    """Date-times and time_extracted are stored as UTC instants even when
+    the Python process runs in another zone."""
+    import os
+    import time
+
+    writer = StreamWriter(
+        spark,
+        WriterConfig(warehouse=str(tmp_path), add_record_metadata=True),
+        mode="parquet",
+    )
+    record = {
+        "type": "RECORD",
+        "stream": "users",
+        "time_extracted": "2024-01-01T12:00:00+02:00",
+        "record": {"id": 1, "name": "a", "created_at": "2024-01-01T12:00:00+02:00"},
+    }
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        SingerTarget(spark, writer).run([json.dumps(USERS_SCHEMA), json.dumps(record)])
+    finally:
+        if old_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    row = writer.read("users").selectExpr(
+        "cast(created_at as string) AS ts", "cast(_sdc_extracted_at as string) AS te"
+    ).first()
+    assert (row["ts"], row["te"]) == ("2024-01-01 10:00:00", "2024-01-01 10:00:00")
+
+
+def test_activate_version_raises_when_existing_table_is_unreadable(spark, writer):
+    """ACTIVATE_VERSION skips retirement only when no table exists; a read
+    error on an existing table surfaces instead of silently keeping the
+    retired version's rows."""
+    target = SingerTarget(spark, writer)
+    target.run(
+        [json.dumps(USERS_SCHEMA), _vrecord("users", 1, id=1, name="a", created_at=None)]
+    )
+    target.process_line(_vrecord("users", 2, id=2, name="b", created_at=None))
+
+    def unreadable(stream):
+        raise OSError("transient warehouse failure")
+
+    writer.read = unreadable
+    with pytest.raises(OSError, match="transient"):
+        target.process_line(
+            json.dumps({"type": "ACTIVATE_VERSION", "stream": "users", "version": 2})
+        )
