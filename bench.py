@@ -92,6 +92,14 @@ every run of this bench after the first) reads the index back and
 pays only the probe/search side. The index is content-keyed, so
 regenerating the test data invalidates it; nothing else in the
 bench persists intermediates or results across runs.
+
+Within one run, `sources/tables.py::load_table` keeps each table
+file's inferred parquet schema in memory, keyed on the file's identity
+(path, size, mtime, inode) and the parquet type-conversion confs, so
+only the first load of each table in the process starts the
+schema-inference job. This is the metadata an Iceberg catalog hands
+the engine; no DataFrame, plan or result is reused, and the cache dies
+with the process, so nothing of it persists across runs.
 """
 
 from __future__ import annotations
@@ -142,7 +150,7 @@ def main() -> None:
         specs = {n: specs[n] for n in only}
     specs = {n: s for n, s in specs.items() if s.bench}
 
-    def run_once(spec, gc: bool = True) -> float:
+    def run_once(spec, gc: bool = True) -> tuple[float, float]:
         # Full JVM GC before a timed run (outside the timed window):
         # keeps one query's garbage from being charged to the next
         # query's timing (round-4 post-mortem; measured 0.13-0.32 s per
@@ -154,11 +162,17 @@ def main() -> None:
         # discards whenever the reverse sweep — full GC discipline —
         # runs). Measured ~130 s of the 415 s per-run bookkeeping
         # overhead, round-14 budget fix.
+        # Returns (total, build): the timed total covers the builder and
+        # the noop write; build is the builder's share of it (table
+        # resolution, eager checkpoints and any job started before the
+        # DataFrame is returned).
         if gc:
             spark._jvm.System.gc()
         t0 = time.perf_counter()
-        spec.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3)
+        df = spec.builder(spark, sf_dir)
+        t1 = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        return round(time.perf_counter() - t0, 3), round(t1 - t0, 3)
 
     times: dict[str, float] = {}
     failed_set: set[str] = set()
@@ -170,16 +184,17 @@ def main() -> None:
     # executions, exactly what the pre-round-14 restore+timed pair
     # measured (see module docstring). ------------------------------
     sweep1: dict[str, float] = {}
+    sweep1_build: dict[str, float] = {}
     for name, spec in sorted(specs.items()):
         try:
-            times[name] = run_once(spec)
+            times[name] = run_once(spec)[0]
         except Exception as exc:  # a broken query must not kill the bench
             times[name] = -1.0
             failed_set.add(name)
             print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
             continue
         try:
-            sweep1[name] = run_once(spec, gc=False)
+            sweep1[name], sweep1_build[name] = run_once(spec, gc=False)
         except Exception as exc:
             failed_set.add(name)
             print(f"bench: {name} FAILED (warm): {exc}", file=sys.stderr)
@@ -209,7 +224,7 @@ def main() -> None:
             if name in failed_set:
                 continue
             try:
-                sweep2[name] = run_once(spec)
+                sweep2[name] = run_once(spec)[0]
             except Exception as exc:
                 failed_set.add(name)
                 print(f"bench: {name} FAILED (warm): {exc}", file=sys.stderr)
@@ -303,7 +318,7 @@ def main() -> None:
                 incomplete: list[dict[str, str]] = []
                 for n in movers:
                     try:
-                        retimed[n] = run_once(specs[n])
+                        retimed[n] = run_once(specs[n])[0]
                     except Exception as exc:  # annex must never kill the bench
                         incomplete.append({"query": n, "error": f"{type(exc).__name__}: {exc}"})
                         print(f"bench: in-session re-time of {n} failed: "
@@ -373,6 +388,8 @@ def main() -> None:
         "queries_cold": times,
         "queries_warm": warm,  # per-query MIN across the two sweeps
         "queries_warm_sweep1": sweep1,
+        # builder share of each sweep-1 sample (the rest is execution)
+        "queries_build_sweep1": sweep1_build,
         "queries_warm_sweep2": sweep2,
     }
     if sweep2_skipped is not None:

@@ -8,6 +8,11 @@ TIMESTAMP(NANOS) — a type Spark 4 refuses unless
 ``spark.sql.legacy.parquet.nanosAsLong=true``, in which case it surfaces
 as a raw long of epoch-nanoseconds that we convert back to a
 microsecond ``timestamp_ntz`` (matching what DuckDB reads, truncated).
+
+A single-file table's schema is inferred (one footer-reading Spark job)
+only on its first load in the process; later loads pass the cached
+``StructType`` to ``spark.read.schema``, which starts no job. Only this
+catalog metadata is reused, never a DataFrame, plan or result.
 """
 
 from __future__ import annotations
@@ -16,6 +21,7 @@ import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -70,19 +76,13 @@ TABLES: tuple[str, ...] = (
 # OPTIMIZATION_r13.md.  Sampling-sensitive inputs (ANN training via
 # `.sample(seed)` / MLlib k-means draws are PER-PARTITION) must never be
 # fanned or results change — keep `embeddings` opt-outs as they are.
-_FANOUT_TABLES: frozenset[str] = frozenset()
-# Default parquet split size (spark.sql.files.maxPartitionBytes); env-
-# overridable so a deployment with a different split size keeps the gate
-# honest without code changes.
-_FANOUT_SPLIT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_SPLIT_BYTES", str(128 * 1024 * 1024))
-)
+#
+# Default parquet split size (spark.sql.files.maxPartitionBytes).
+_FANOUT_SPLIT_BYTES = 128 * 1024 * 1024
 # Below this the table is dimension-sized: the scan is trivial and the
 # exchange would cost more than it saves (also keeps the sf0.001 smoke
 # data on the exact pre-fanout plans).
-_FANOUT_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_MIN_BYTES", str(256 * 1024))
-)
+_FANOUT_MIN_BYTES = 256 * 1024
 
 
 def _table_bytes(path: str) -> int:
@@ -101,9 +101,6 @@ def _table_bytes(path: str) -> int:
     return -1  # non-local storage: assume at-scale, never fan out
 
 
-_FANOUT_PARTS_OVERRIDE: int | None = None  # test/A-B hook only
-
-
 def scan_fanout(spark: SparkSession, df: DataFrame, nbytes: int) -> DataFrame:
     """Round-robin-fan a scan across the cluster when (and only when) the
     input is too small for the split planner to feed every core."""
@@ -112,11 +109,44 @@ def scan_fanout(spark: SparkSession, df: DataFrame, nbytes: int) -> DataFrame:
         return df
     if nbytes >= cores * _FANOUT_SPLIT_BYTES:
         return df  # enough splits exist already — no-op at real scale
-    return df.repartition(_FANOUT_PARTS_OVERRIDE or cores)
+    return df.repartition(cores)
+
+
+# Session confs that change how parquet physical types convert to Spark
+# types: a schema inferred under one setting is wrong under another.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+# abspath -> (file identity + conf values, schema): one entry per path.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a regular file's schema
+    once per file identity and conversion confs. A directory is always
+    inferred: rewriting a file inside it leaves the directory's stat as
+    it was."""
+    if not os.path.isfile(path):  # a directory, or not on local disk
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    abspath = os.path.abspath(path)
+    stamp = (
+        st.st_size, st.st_mtime_ns, st.st_ino,
+        tuple(spark.conf.get(c) for c in _SCHEMA_CONFS),
+    )
+    hit = _SCHEMAS.get(abspath)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[abspath] = (stamp, df.schema)
+    return df
 
 
 def load_table(
-    spark: SparkSession, sf_dir: str, name: str, fanout: bool | None = None
+    spark: SparkSession, sf_dir: str, name: str, fanout: bool = False
 ) -> DataFrame:
     """Load one test table as a DataFrame with engine-normalized columns."""
     from target_iceberg_spark.session import ensure_package_shipped
@@ -132,15 +162,13 @@ def load_table(
         # same explicit conversion this function applies to events.ts.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # epoch-ns long -> µs timestamp_ntz (truncating division, same as
         # DuckDB's TIMESTAMP_NS -> TIMESTAMP cast for post-1970 data).
         df = df.withColumn(
             "ts", F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
         )
-    if fanout is None:
-        fanout = name in _FANOUT_TABLES
     if fanout:
         df = scan_fanout(spark, df, _table_bytes(path))
     return df
