@@ -105,18 +105,32 @@ with the process, so nothing of it persists across runs.
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
 import time
 
 
+def _env_number(name: str, default: str) -> float:
+    """A non-negative finite number from the environment, or exit."""
+    raw = os.environ.get(name, default)
+    try:
+        value = float(raw)
+    except ValueError:
+        value = math.nan
+    if not math.isfinite(value) or value < 0:
+        sys.exit(f"bench: {name} must be a non-negative number, got {raw!r}")
+    return value
+
+
 def main() -> None:
     t_start = time.perf_counter()
-    budget_sec = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "2100"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     # Parsed here, before the sweep: a bad value must not surface only
-    # when the detail file is written, after a full run.
+    # when it is first used, after a full run.
+    budget_sec = _env_number("SPARK_GRAFT_BENCH_BUDGET_SEC", "2100")
+    spread_gate = _env_number("SPARK_GRAFT_SPREAD_PCT", "10.0")
     cpus_env = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if not cpus_env.isdigit() or int(cpus_env) < 1:
         sys.exit(f"bench: SPARK_GRAFT_CPUS must be a positive integer, got {cpus_env!r}")
@@ -264,7 +278,6 @@ def main() -> None:
     # `--only`, and record the isolated warms as an annex in the
     # detail artifact. `--only` runs never recurse.
     movers_annex = None
-    spread_gate = float(os.environ.get("SPARK_GRAFT_SPREAD_PCT", "10.0"))
     if (
         only is None
         and sweep2_skipped is None

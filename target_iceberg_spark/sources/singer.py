@@ -15,7 +15,10 @@ Two ingestion paths, same semantics:
     writer as one Spark batch, handed over as one ``pyarrow.Table``
     (the reference's ``pa.Table.from_pylist``, sinks.py:82). Matches
     the reference's lifecycle (SURVEY §3) including at-least-once STATE
-    emission.
+    emission. At STATE/EOF the streams holding records are
+    written concurrently, each on its own thread, so their Spark write
+    jobs overlap; STATE is emitted only once every drain has succeeded (see
+    :meth:`SingerTarget._drain_all`).
 
   * :func:`demux_singer_file` — the scale path the reference lacks.
     For bulk backfills (a 100 TB pile of Singer JSONL on object
@@ -30,6 +33,7 @@ from __future__ import annotations
 
 import json
 from collections.abc import Callable, Iterable
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import date, datetime, timezone
 from typing import Any
@@ -50,12 +54,15 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+from pyspark.util import inheritable_thread_target
 
 from target_iceberg_spark.bounded import bounded_collect
 from target_iceberg_spark.schema import json_schema_to_struct_type
 from target_iceberg_spark.writer import StreamWriter
 
 DEFAULT_MAX_BATCH_SIZE = 10_000  # reference sinks.py:18
+# Upper bound on the streams drained at once at a STATE boundary.
+_DRAIN_THREADS = 8
 
 
 def _parse_timestamp(value: str) -> datetime:
@@ -69,8 +76,8 @@ def _parse_timestamp(value: str) -> datetime:
 
 
 def _coerce_value(value: Any, dtype: DataType, name: str) -> Any:
-    """Turn one JSON value into what ``pa.Table.from_pylist`` stores
-    under ``dtype``'s Arrow type, or raise. Recurses into structs and
+    """Turn one JSON value into what pyarrow stores under ``dtype``'s
+    Arrow type, or raise. Recurses into structs and
     array elements.
 
     ISO strings become dates and timestamps (the reference gets this
@@ -353,11 +360,21 @@ class SingerTarget:
         """Write the buffer as one batch. Coercion, the Arrow table and
         the write all happen here, so any failure leaves the buffer in
         place for a retry (at-least-once, never silent loss)."""
-        if not stream.buffer:
-            return
+        if stream.buffer:
+            self._commit(stream, self._to_frame(stream))
+
+    def _to_frame(self, stream: _StreamState) -> DataFrame:
+        """The buffer as a DataFrame: coercion, the Arrow table and its
+        hand-off to Spark. Leaves the buffer untouched."""
         schema = stream.schema
-        table = pa.Table.from_pylist(
-            [_coerce_record(r, schema) for r in stream.buffer], schema=stream.arrow_schema
+        # column by column, as from_pylist splits rows itself: no coerced
+        # dict per record, so a drain leaves the cyclic GC few new
+        # objects to track (its full passes cost ~0.1 s at this heap size)
+        buffer = stream.buffer
+        table = pa.Table.from_arrays(
+            [[_coerce_value(r.get(f.name), f.dataType, f.name) for r in buffer]
+             for f in schema.fields],
+            schema=stream.arrow_schema,
         )
         add_meta = getattr(self.writer.config, "add_record_metadata", False)
         stamp = add_meta and any(e is not None for e in stream.extracted)
@@ -382,14 +399,55 @@ class SingerTarget:
                 "_sdc_extracted_at",
                 F.coalesce(F.col("_sdc_extracted_at"), F.current_timestamp()),
             )
+        return df
+
+    def _commit(self, stream: _StreamState, df: DataFrame) -> None:
         self._write_df(stream, df, len(stream.buffer))
         # cleared only AFTER the write succeeds
         stream.buffer = []
         stream.extracted = []
 
     def _drain_all(self) -> None:
-        for stream in self.streams.values():
-            self._drain(stream)
+        """Drain every stream that holds records, and return only when
+        all drains have finished (STATE is emitted after this returns).
+
+        With two or more pending streams, this thread builds each
+        stream's DataFrame in turn (coercion, Arrow table, hand-off: the
+        CPU-bound Python part, which threads would only contend for under
+        the GIL) and hands its write to a pool of up to
+        ``_DRAIN_THREADS`` threads, so the Spark write jobs overlap with
+        each other and with the next stream's build. Each stream is
+        written by one thread, so its records still reach the writer in
+        arrival order. Each write runs under a copy of the caller's Spark
+        local properties (job group, scheduler pool) taken here, so the
+        writes stay in the caller's job group. The copy is made per
+        stream: a wrapper installs its one copy in every thread that
+        runs it, so threads sharing a wrapper would overwrite each
+        other's SQL execution id. A single pending stream drains inline.
+
+        Every drain is attempted. A drain that succeeded has committed
+        and cleared its buffer; a failed one keeps its buffer for the
+        replay (at-least-once). If any failed, the exception of the
+        first failing stream in declaration order is raised."""
+        pending = [s for s in self.streams.values() if s.buffer]
+        if len(pending) <= 1:
+            for stream in pending:
+                self._drain(stream)
+            return
+        outcomes: list[Future | Exception] = []
+        with ThreadPoolExecutor(max_workers=min(len(pending), _DRAIN_THREADS)) as pool:
+            for stream in pending:
+                try:
+                    df = self._to_frame(stream)
+                except Exception as e:
+                    outcomes.append(e)
+                    continue
+                commit = inheritable_thread_target(self.spark)(self._commit)
+                outcomes.append(pool.submit(commit, stream, df))
+        for outcome in outcomes:  # declaration order
+            if isinstance(outcome, Exception):
+                raise outcome
+            outcome.result()
 
 
 def demux_singer_file(

@@ -35,6 +35,7 @@ always creates unpartitioned tables (sinks.py:96).
 
 from __future__ import annotations
 
+import itertools
 import os
 import shutil
 import uuid
@@ -88,7 +89,9 @@ class StreamWriter:
         if mode not in ("iceberg", "parquet"):
             raise ValueError(f"unknown writer mode: {mode}")
         self.mode = mode
-        self._batch_seq = 0
+        # _sdc_sequence source; next() on it is atomic in CPython, so
+        # streams drained on concurrent threads get distinct values
+        self._batch_seq = itertools.count(1)
         self.ensure_namespace()
 
     # -- identifiers -----------------------------------------------------
@@ -145,14 +148,14 @@ class StreamWriter:
         are passed through untouched."""
         if not self.config.add_record_metadata:
             return df
-        self._batch_seq += 1
+        seq = next(self._batch_seq)
         existing = set(df.columns)
         defaults = {
             "_sdc_extracted_at": F.current_timestamp(),
             "_sdc_received_at": F.current_timestamp(),
             "_sdc_batched_at": F.current_timestamp(),
             "_sdc_deleted_at": F.lit(None).cast("timestamp"),
-            "_sdc_sequence": F.lit(self._batch_seq).cast("long"),
+            "_sdc_sequence": F.lit(seq).cast("long"),
             "_sdc_table_version": F.lit(None).cast("long"),
         }
         for name, col in defaults.items():

@@ -4,6 +4,9 @@ stream->table lifecycle (reference sinks.py) on the parquet warehouse."""
 from __future__ import annotations
 
 import json
+import threading
+import uuid
+import warnings
 
 import pytest
 
@@ -524,3 +527,177 @@ def test_activate_version_raises_when_existing_table_is_unreadable(spark, writer
         target.process_line(
             json.dumps({"type": "ACTIVATE_VERSION", "stream": "users", "version": 2})
         )
+
+
+# -- concurrent drains at STATE ---------------------------------------------
+
+_STREAMS = ("s_a", "s_b", "s_c")
+
+
+def _buffer_three_streams(target):
+    """Declare three streams and buffer one record in each."""
+    for name in _STREAMS:
+        target.process_line(json.dumps({
+            "type": "SCHEMA", "stream": name, "key_properties": [],
+            "schema": {"properties": {"id": {"type": ["integer"]}}},
+        }))
+    for i, name in enumerate(_STREAMS):
+        target.process_line(_record(name, id=i))
+
+
+def _state(n):
+    return json.dumps({"type": "STATE", "value": {"n": n}})
+
+
+def test_state_drains_buffered_streams_concurrently(spark, writer):
+    """Each append waits on a 3-party barrier, so the STATE passes only
+    if the three streams' writes are in flight at once; a sequential
+    drain would break the barrier on its timeout."""
+    target = SingerTarget(spark, writer)
+    _buffer_three_streams(target)
+    barrier = threading.Barrier(3, timeout=30)
+    orig_append = writer.append
+
+    def append_at_barrier(df, stream):
+        barrier.wait()
+        return orig_append(df, stream)
+
+    writer.append = append_at_barrier
+    target.process_line(_state(1))
+    assert target.emitted_states == [{"n": 1}]
+    assert [writer.read(s).count() for s in _STREAMS] == [1, 1, 1]
+
+
+def test_failed_drain_keeps_its_buffer_and_withholds_state(spark, writer):
+    """One stream's failed write: the other streams commit and clear,
+    the failed one keeps its records, STATE is not emitted, and the
+    raised error is that stream's. The next STATE commits the rest."""
+    states = []
+    target = SingerTarget(spark, writer, state_callback=states.append)
+    _buffer_three_streams(target)
+    orig_append = writer.append
+    broken = {"s_b"}
+
+    def append_failing(df, stream):
+        if stream in broken:
+            raise OSError(f"{stream}: warehouse failure")
+        return orig_append(df, stream)
+
+    writer.append = append_failing
+    with pytest.raises(OSError, match="s_b"):
+        target.process_line(_state(1))
+    assert states == [] and target.emitted_states == []
+    assert [len(target.streams[s].buffer) for s in _STREAMS] == [0, 1, 0]
+    assert writer.read("s_a").count() == 1 and writer.read("s_c").count() == 1
+    assert not writer.table_exists("s_b")
+
+    broken.clear()
+    target.process_line(_state(2))
+    assert states == [{"n": 2}]
+    assert [writer.read(s).count() for s in _STREAMS] == [1, 1, 1]
+    assert [target.streams[s].batches_written for s in _STREAMS] == [1, 1, 1]
+
+
+def test_uncoercible_record_fails_only_its_streams_drain(spark, writer):
+    """A bad value fails its stream's drain before any write starts; the
+    streams declared before and after it are still written."""
+    states = []
+    target = SingerTarget(spark, writer, state_callback=states.append)
+    _buffer_three_streams(target)
+    target.process_line(_record("s_b", id="not-an-int"))
+    with pytest.raises(TypeError, match="'id'"):
+        target.process_line(_state(1))
+    assert states == []
+    assert [len(target.streams[s].buffer) for s in _STREAMS] == [0, 2, 0]
+    assert writer.read("s_a").count() == 1 and writer.read("s_c").count() == 1
+    assert not writer.table_exists("s_b")
+
+
+def test_failed_drains_raise_in_declaration_order(spark, writer):
+    """With two failing streams the error raised is the first declared
+    stream's, even when the later one fails first."""
+    target = SingerTarget(spark, writer)
+    _buffer_three_streams(target)
+    c_failed = threading.Event()
+
+    def append_failing(df, stream):
+        if stream == "s_b":
+            c_failed.wait(timeout=30)
+            raise OSError("s_b: warehouse failure")
+        if stream == "s_c":
+            c_failed.set()
+            raise OSError("s_c: warehouse failure")
+
+    writer.append = append_failing
+    with pytest.raises(OSError, match="s_b"):
+        target.process_line(_state(1))
+    assert c_failed.is_set()
+    assert [len(target.streams[s].buffer) for s in _STREAMS] == [0, 1, 1]
+
+
+def test_concurrent_drains_get_distinct_batch_sequences(spark, tmp_path):
+    """``_sdc_sequence`` is one counter on the writer; three streams
+    drained in one STATE must each get their own value."""
+    writer = StreamWriter(
+        spark,
+        WriterConfig(warehouse=str(tmp_path), add_record_metadata=True),
+        mode="parquet",
+    )
+    target = SingerTarget(spark, writer)
+    _buffer_three_streams(target)
+    target.process_line(_state(1))
+    seqs = {s: writer.read(s).first()["_sdc_sequence"] for s in _STREAMS}
+    assert sorted(seqs.values()) == [1, 2, 3]
+
+
+def test_concurrent_drains_run_in_the_callers_job_group(spark, writer):
+    """Drain threads inherit the caller's Spark local properties: the
+    write jobs of a 3-stream STATE belong to the caller's job group, so
+    cancelling or tracing that group covers them."""
+    target = SingerTarget(spark, writer)
+    _buffer_three_streams(target)
+    sc = spark.sparkContext
+    group = f"test-singer-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "3-stream STATE")
+    try:
+        target.process_line(_state(1))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= len(_STREAMS)
+
+
+def test_concurrent_drains_do_not_share_local_properties(spark, writer):
+    """Spark sets per-query local properties (the SQL execution id) on
+    the running thread during a write. Each drain thread must hold its
+    own copy of the caller's properties, or one stream's write would
+    overwrite another's while both are in flight."""
+    target = SingerTarget(spark, writer)
+    _buffer_three_streams(target)
+    sc = spark.sparkContext
+    barrier = threading.Barrier(3, timeout=30)
+    seen = {}
+    orig_append = writer.append
+
+    def append_probe(df, stream):
+        sc.setLocalProperty("test.drain.stream", stream)
+        barrier.wait()
+        seen[stream] = sc.getLocalProperty("test.drain.stream")
+        return orig_append(df, stream)
+
+    writer.append = append_probe
+    target.process_line(_state(1))
+    assert seen == {s: s for s in _STREAMS}
+    assert sc.getLocalProperty("test.drain.stream") is None
+
+
+def test_concurrent_drains_raise_no_user_warning(spark, writer):
+    """PySpark warns when a thread wrapper is built without the session;
+    a 3-stream STATE must not warn."""
+    target = SingerTarget(spark, writer)
+    _buffer_three_streams(target)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        target.process_line(_state(1))
+    assert [str(w.message) for w in caught if issubclass(w.category, UserWarning)] == []
