@@ -115,7 +115,11 @@ def main(argv: list[str] | None = None) -> int:
     args = parser.parse_args(argv)
 
     cfg = load_config(args.config)
-    spark = get_spark("target-iceberg-spark-cli")
+    # progress bars would interleave with the per-stream summary on stderr
+    spark = get_spark(
+        "target-iceberg-spark-cli",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     target = build_target(spark, cfg, state_out=sys.stdout, mode=args.mode)
 
     if args.input == "-":

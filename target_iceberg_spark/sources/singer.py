@@ -15,10 +15,10 @@ Two ingestion paths, same semantics:
     writer as one Spark batch, handed over as one ``pyarrow.Table``
     (the reference's ``pa.Table.from_pylist``, sinks.py:82). Matches
     the reference's lifecycle (SURVEY §3) including at-least-once STATE
-    emission. At STATE/EOF the streams holding records are
-    written concurrently, each on its own thread, so their Spark write
-    jobs overlap; STATE is emitted only once every drain has succeeded (see
-    :meth:`SingerTarget._drain_all`).
+    emission. Every drain goes through :meth:`SingerTarget._drain`:
+    at STATE/EOF the streams holding records are written concurrently,
+    each on its own thread, so their Spark write jobs overlap; STATE is
+    emitted only once every drain has succeeded.
 
   * :func:`demux_singer_file` — the scale path the reference lacks.
     For bulk backfills (a 100 TB pile of Singer JSONL on object
@@ -40,6 +40,8 @@ from typing import Any
 
 import pyarrow as pa
 import pyspark.sql.functions as F
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
@@ -322,25 +324,25 @@ class SingerTarget:
             # malformed record — without it the loud-fail check below
             # would reject the whole batch over a stray " \n"
             .where(F.trim(F.col("value")) != "")
-            .select(F.from_json("value", stream.schema).alias("r"))
-        )
-        # One aggregation pass counts raw non-empty lines AND rows that
-        # survived the schema parse. A malformed line becomes a NULL
-        # struct under from_json; silently filtering it would shrink the
-        # table with no signal — the buffered RECORD path (and the
-        # reference SDK) fails loudly on malformed records, so the bulk
-        # path must too (at-least-once, never silent loss).
-        stats = parsed.agg(
-            F.count(F.lit(1)).alias("raw"), F.count("r").alias("ok")
-        ).first()
-        if stats["ok"] < stats["raw"]:
-            raise ValueError(
-                f"BATCH for stream {name!r}: {stats['raw'] - stats['ok']} of "
-                f"{stats['raw']} lines in {paths} failed to parse under the "
-                "stream schema"
+            # FAILFAST: under PERMISSIVE a malformed line or a mistyped
+            # value parses to a struct of NULLs, written as a row; the
+            # RECORD path (and the reference SDK) fails loudly, so must this
+            .select(
+                F.from_json("value", stream.schema, {"mode": "FAILFAST"}).alias("r")
             )
-        df = parsed.where(F.col("r").isNotNull()).select("r.*")
-        self._write_df(stream, df, stats["ok"])
+        )
+        # The count must read the parsed column: a count of rows alone
+        # lets the optimizer drop the parse, and nothing would raise.
+        try:
+            n_records = parsed.agg(F.count("r")).first()[0]
+        except (Py4JJavaError, PySparkException) as e:
+            if "MALFORMED_RECORD_IN_PARSING" not in str(e):
+                raise
+            raise ValueError(
+                f"BATCH for stream {name!r}: a line in {paths} failed to "
+                "parse under the stream schema"
+            ) from e
+        self._write_df(stream, parsed.select("r.*"), n_records)
 
     def _write_df(self, stream: _StreamState, df: DataFrame, n_records: int) -> None:
         if stream.version is not None:
@@ -355,13 +357,6 @@ class SingerTarget:
             self.writer.append(df, stream.name)
         stream.records_written += n_records
         stream.batches_written += 1
-
-    def _drain(self, stream: _StreamState) -> None:
-        """Write the buffer as one batch. Coercion, the Arrow table and
-        the write all happen here, so any failure leaves the buffer in
-        place for a retry (at-least-once, never silent loss)."""
-        if stream.buffer:
-            self._commit(stream, self._to_frame(stream))
 
     def _to_frame(self, stream: _StreamState) -> DataFrame:
         """The buffer as a DataFrame: coercion, the Arrow table and its
@@ -408,31 +403,35 @@ class SingerTarget:
         stream.extracted = []
 
     def _drain_all(self) -> None:
-        """Drain every stream that holds records, and return only when
-        all drains have finished (STATE is emitted after this returns).
+        """Drain every stream that holds records (STATE is emitted after
+        this returns)."""
+        self._drain(*self.streams.values())
 
-        With two or more pending streams, this thread builds each
-        stream's DataFrame in turn (coercion, Arrow table, hand-off: the
-        CPU-bound Python part, which threads would only contend for under
-        the GIL) and hands its write to a pool of up to
-        ``_DRAIN_THREADS`` threads, so the Spark write jobs overlap with
-        each other and with the next stream's build. Each stream is
-        written by one thread, so its records still reach the writer in
-        arrival order. Each write runs under a copy of the caller's Spark
-        local properties (job group, scheduler pool) taken here, so the
-        writes stay in the caller's job group. The copy is made per
-        stream: a wrapper installs its one copy in every thread that
-        runs it, so threads sharing a wrapper would overwrite each
-        other's SQL execution id. A single pending stream drains inline.
+    def _drain(self, *streams: _StreamState) -> None:
+        """Write each given stream's buffer as one batch, and return
+        only when every write has finished. Streams with empty buffers
+        are skipped.
+
+        This thread builds each stream's DataFrame in turn (coercion,
+        Arrow table, hand-off: the CPU-bound Python part, which threads
+        would only contend for under the GIL) and hands its write to a
+        pool of up to ``_DRAIN_THREADS`` threads, so the Spark write
+        jobs overlap with each other and with the next stream's build.
+        Each stream is written by one thread, so its records still reach
+        the writer in arrival order. Each write runs under a copy of the
+        caller's Spark local properties (job group, scheduler pool) taken
+        here, so the writes stay in the caller's job group. The copy is
+        made per stream: a wrapper installs its one copy in every thread
+        that runs it, so threads sharing a wrapper would overwrite each
+        other's SQL execution id.
 
         Every drain is attempted. A drain that succeeded has committed
         and cleared its buffer; a failed one keeps its buffer for the
-        replay (at-least-once). If any failed, the exception of the
-        first failing stream in declaration order is raised."""
-        pending = [s for s in self.streams.values() if s.buffer]
-        if len(pending) <= 1:
-            for stream in pending:
-                self._drain(stream)
+        replay (at-least-once, never silent loss). If any failed, the
+        exception of the first failing stream in the order given is
+        raised."""
+        pending = [s for s in streams if s.buffer]
+        if not pending:
             return
         outcomes: list[Future | Exception] = []
         with ThreadPoolExecutor(max_workers=min(len(pending), _DRAIN_THREADS)) as pool:
@@ -444,7 +443,7 @@ class SingerTarget:
                     continue
                 commit = inheritable_thread_target(self.spark)(self._commit)
                 outcomes.append(pool.submit(commit, stream, df))
-        for outcome in outcomes:  # declaration order
+        for outcome in outcomes:  # the order given
             if isinstance(outcome, Exception):
                 raise outcome
             outcome.result()
@@ -486,11 +485,12 @@ def demux_singer_file(
             text.select(F.from_json("value", "type STRING, stream STRING").alias("m"),
                         F.col("value"))
             .where((F.col("m.type") == "RECORD") & (F.col("m.stream") == stream))
-            # corrupt RECORD lines (unparseable payload) are dropped here
-            # instead of surfacing as all-null rows — the engine's
-            # equivalent of the SDK's per-record validation (SURVEY §2 A2)
+            # drops RECORD lines that are not JSON or carry no record
             .where(payload.isNotNull())
             .select(F.from_json(payload, struct).alias("r"))
+            # drops nothing: under PERMISSIVE parsing a payload that does
+            # not fit the schema (a mistyped value, a non-object) parses
+            # to a struct with NULL fields, never to NULL, and is kept
             .where(F.col("r").isNotNull())
             .select("r.*")
         )

@@ -73,7 +73,7 @@ TABLES: tuple[str, ...] = (
 # heavy per-row compute (shingles, md5 folds, n-gram explodes) is fused
 # onto the one-task scan and dominates the query; those sites opt in, each
 # with an interleaved same-JVM A/B measurement recorded in
-# OPTIMIZATION_r13.md.  Sampling-sensitive inputs (ANN training via
+# artifacts/OPTIMIZATION_r13.md.  Sampling-sensitive inputs (ANN training via
 # `.sample(seed)` / MLlib k-means draws are PER-PARTITION) must never be
 # fanned or results change — keep `embeddings` opt-outs as they are.
 #

@@ -26,7 +26,10 @@ Two physical modes behind one API:
     ships no Iceberg runtime jar, and correctness must not depend on
     network jars. Upsert/overwrite rewrite via a temp dir + directory
     swap (Iceberg gives real snapshot atomicity; the parquet fallback
-    is best-effort and documents that).
+    is best-effort and documents that). A parquet upsert unions the
+    table's rows with the batch and keeps the newest row per key in a
+    single window (``_latest_per_key``): batch dedupe and table merge
+    are one step.
 
 At 100 TB: appends should land partitioned (pass ``partition_by`` —
 e.g. a day-bucketed column) so downstream scans prune; the reference
@@ -39,6 +42,7 @@ import itertools
 import os
 import shutil
 import uuid
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
@@ -127,15 +131,16 @@ class StreamWriter:
     def table_exists(self, stream: str) -> bool:
         if self.mode == "iceberg":
             return self.spark.catalog.tableExists(self.table_identifier(stream))
-        path = self.table_path(stream)
-        if not os.path.isdir(path):
-            return False
-        # recursive: partitioned tables keep data under key=value/ subdirs
-        return any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(path)
-            for f in files
-        )
+        return next(self._parquet_files(stream), None) is not None
+
+    def _parquet_files(self, stream: str) -> Iterator[str]:
+        """Yield the path of every parquet data file of the table. The
+        walk is recursive: partitioned tables keep data under key=value/
+        subdirs. A missing table directory yields nothing."""
+        for dirpath, _, files in os.walk(self.table_path(stream)):
+            for f in files:
+                if f.endswith(".parquet"):
+                    yield os.path.join(dirpath, f)
 
     # -- record metadata (reference A12, SDK-inherited) ------------------
     def _with_metadata(self, df: DataFrame) -> DataFrame:
@@ -189,10 +194,7 @@ class StreamWriter:
         if self.mode == "iceberg":
             ident = self.table_identifier(stream)
             if not self.table_exists(stream):
-                w = df.writeTo(ident)
-                if self.config.partition_by:
-                    w = w.partitionedBy(*[F.col(c) for c in self.config.partition_by])
-                w.create()
+                self._create(df, ident)
             else:
                 # merge-schema lets an evolved stream add columns without
                 # manual ALTER TABLE (reference TODO at sinks.py:92)
@@ -203,17 +205,29 @@ class StreamWriter:
                 writer = writer.partitionBy(*self.config.partition_by)
             writer.parquet(self.table_path(stream))
 
+    def _create(self, df: DataFrame, ident: str) -> None:
+        """Iceberg CREATE from the first batch, with the configured
+        partition spec (the reference creates unpartitioned tables)."""
+        w = df.writeTo(ident)
+        if self.config.partition_by:
+            w = w.partitionedBy(*[F.col(c) for c in self.config.partition_by])
+        w.create()
+
     @staticmethod
-    def _dedupe_batch(df: DataFrame, key_properties: list[str]) -> DataFrame:
-        """Keep the LAST row per key within one batch (arrival order ==
-        row order in the buffered DataFrame; monotonically_increasing_id
-        is ascending in that order). Required before MERGE — multiple
-        source matches per target row are an error in Iceberg — and for
-        deterministic last-write-wins in the parquet path."""
+    def _latest_per_key(df: DataFrame, key_properties: list[str]) -> DataFrame:
+        """Keep the row with the highest ``_upsert_seq`` per key, and
+        drop the helper columns.
+
+        Precedence: ``upsert`` stamps the batch with
+        ``monotonically_increasing_id``, which ascends in arrival order,
+        so the batch's last row per key wins over its earlier ones; in
+        parquet mode the table's existing rows carry -1, so any batch
+        row wins over the stored one. Deduping the batch is required
+        before MERGE too: several source matches per target row are an
+        error in Iceberg."""
         w = Window.partitionBy(*key_properties).orderBy(F.desc("_upsert_seq"))
         return (
-            df.withColumn("_upsert_seq", F.monotonically_increasing_id())
-            .withColumn("_upsert_rn", F.row_number().over(w))
+            df.withColumn("_upsert_rn", F.row_number().over(w))
             .where(F.col("_upsert_rn") == 1)
             .drop("_upsert_rn", "_upsert_seq")
         )
@@ -267,14 +281,14 @@ class StreamWriter:
         handling of keyed streams (reference sinks.py:25,100)."""
         if not key_properties:
             raise ValueError("upsert requires non-empty key_properties")
-        df = self._dedupe_batch(self._with_metadata(df), key_properties)
+        df = self._with_metadata(df).withColumn(
+            "_upsert_seq", F.monotonically_increasing_id()
+        )
         if self.mode == "iceberg":
+            df = self._latest_per_key(df, key_properties)
             ident = self.table_identifier(stream)
             if not self.table_exists(stream):
-                w = df.writeTo(ident)
-                if self.config.partition_by:
-                    w = w.partitionedBy(*[F.col(c) for c in self.config.partition_by])
-                w.create()
+                self._create(df, ident)
                 return
             view = f"_upsert_src_{uuid.uuid4().hex[:8]}"
             df.createOrReplaceTempView(view)
@@ -288,17 +302,12 @@ class StreamWriter:
                 self.spark.catalog.dropTempView(view)
             return
         # parquet mode: union + keep newest row per key, then swap dirs.
-        df = df.withColumn("_upsert_gen", F.lit(1))
         if self.table_exists(stream):
-            existing = self.read(stream).withColumn("_upsert_gen", F.lit(0))
+            existing = self.read(stream).withColumn(
+                "_upsert_seq", F.lit(-1).cast("long")
+            )
             df = existing.unionByName(df, allowMissingColumns=True)
-        w = Window.partitionBy(*key_properties).orderBy(F.desc("_upsert_gen"))
-        deduped = (
-            df.withColumn("_upsert_rn", F.row_number().over(w))
-            .where(F.col("_upsert_rn") == 1)
-            .drop("_upsert_rn", "_upsert_gen")
-        )
-        self._swap_write(deduped, stream)
+        self._swap_write(self._latest_per_key(df, key_properties), stream)
 
     def delete_where(self, stream: str, condition: str) -> None:
         """Delete rows matching a SQL condition (used by ACTIVATE_VERSION
@@ -354,13 +363,7 @@ class StreamWriter:
                 )
             )
             return -1  # Iceberg tracks its own file inventory
-        path = self.table_path(stream)
-        total_bytes = sum(
-            os.path.getsize(os.path.join(dirpath, f))
-            for dirpath, _, files in os.walk(path)
-            for f in files
-            if f.endswith(".parquet")
-        )
+        total_bytes = sum(os.path.getsize(f) for f in self._parquet_files(stream))
         n_files = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))
         df = self.read(stream)
         if not self.config.sort_by:
@@ -368,12 +371,7 @@ class StreamWriter:
         # sort_by: _swap_write re-clusters by range at exactly n_files,
         # so compaction preserves the table's sort-order clustering
         self._swap_write(df, stream, n_files=int(n_files))
-        return sum(
-            1
-            for dirpath, _, files in os.walk(path)
-            for f in files
-            if f.endswith(".parquet")
-        )
+        return sum(1 for _ in self._parquet_files(stream))
 
     # -- reads -----------------------------------------------------------
     def read(self, stream: str) -> DataFrame:
