@@ -12,20 +12,25 @@ Two ingestion paths, same semantics:
   * :class:`SingerTarget` — the parity path. A driver-side listen loop:
     demux messages per stream, buffer up to ``max_batch_size`` records,
     drain each full buffer (and all buffers at STATE/EOF) through the
-    writer as one Spark batch, handed over as one ``pyarrow.Table``
-    (the reference's ``pa.Table.from_pylist``, sinks.py:82). Matches
-    the reference's lifecycle (SURVEY §3) including at-least-once STATE
-    emission. Every drain goes through :meth:`SingerTarget._drain`:
-    at STATE/EOF the streams holding records are written concurrently,
-    each on its own thread, so their Spark write jobs overlap; STATE is
-    emitted only once every drain has succeeded.
+    writer as one ``pyarrow.Table`` (the reference's
+    ``pa.Table.from_pylist``, sinks.py:82). The writer commits it as
+    the reference's ``table.append`` does: in parquet mode an append is
+    one file written in-process by pyarrow, with no Spark job; upserts,
+    Iceberg mode and partitioned, sorted or metadata-stamped tables
+    hand the table to Spark. Matches the reference's lifecycle
+    (SURVEY §3) including at-least-once STATE emission. Every drain
+    goes through :meth:`SingerTarget._drain`: at STATE/EOF the streams
+    holding records are written concurrently, each on its own thread,
+    so their writes overlap; STATE is emitted only once every drain has
+    succeeded.
 
   * :func:`demux_singer_file` — the scale path the reference lacks.
     For bulk backfills (a 100 TB pile of Singer JSONL on object
     storage) the listen loop's driver-side buffering is the bottleneck,
     so instead: read the files as a distributed text DataFrame, filter
     RECORD lines per stream, and parse them executor-side with
-    ``from_json`` under the translated schema. One Spark job per
+    ``from_json`` under the translated schema, failing loudly on a
+    payload that does not fit it, as BATCH does. One Spark job per
     stream, fully parallel, no driver round-trip.
 """
 
@@ -52,7 +57,6 @@ from pyspark.sql.types import (
     DoubleType,
     LongType,
     StringType,
-    StructField,
     StructType,
     TimestampType,
 )
@@ -77,7 +81,7 @@ def _parse_timestamp(value: str) -> datetime:
     return dt
 
 
-def _coerce_value(value: Any, dtype: DataType, name: str) -> Any:
+def _coerce_value(value: Any, dtype: DataType, name: str, nullable: bool) -> Any:
     """Turn one JSON value into what pyarrow stores under ``dtype``'s
     Arrow type, or raise. Recurses into structs and
     array elements.
@@ -94,13 +98,16 @@ def _coerce_value(value: Any, dtype: DataType, name: str) -> Any:
         bools, a boolean slot only bools;
       * a temporal slot takes only strings (pyarrow reads an int as an
         epoch offset), an array slot only lists (pyarrow splits a
-        string into characters).
+        string into characters);
+      * None is taken only where ``nullable`` (the field's
+        ``nullable``, an array's ``containsNull``) allows it: pyarrow
+        stores a null in a non-nullable column as 0 or ''.
 
-    Integers outside int64 are left to pyarrow, and None in a
-    non-nullable slot to ``createDataFrame``'s cast to the Spark
-    schema; both raise."""
+    Integers outside int64 are left to pyarrow, which raises."""
     if value is None:
-        return None
+        if nullable:
+            return None
+        raise ValueError(f"field {name!r}: {dtype.simpleString()} is not nullable, got None")
     kind, vtype = type(dtype), type(value)
     if kind is StringType:
         if vtype is str:
@@ -131,7 +138,10 @@ def _coerce_value(value: Any, dtype: DataType, name: str) -> Any:
             return _coerce_record(dict(zip(dtype.names, value)), dtype)
     elif kind is ArrayType:
         if vtype in (list, tuple):
-            return [_coerce_value(v, dtype.elementType, name) for v in value]
+            return [
+                _coerce_value(v, dtype.elementType, name, dtype.containsNull)
+                for v in value
+            ]
     else:
         return value
     raise TypeError(
@@ -141,7 +151,7 @@ def _coerce_value(value: Any, dtype: DataType, name: str) -> Any:
 
 def _coerce_record(record: dict[str, Any], schema: StructType) -> dict[str, Any]:
     return {
-        f.name: _coerce_value(record.get(f.name), f.dataType, f.name)
+        f.name: _coerce_value(record.get(f.name), f.dataType, f.name, f.nullable)
         for f in schema.fields
     }
 
@@ -342,62 +352,58 @@ class SingerTarget:
                 f"BATCH for stream {name!r}: a line in {paths} failed to "
                 "parse under the stream schema"
             ) from e
-        self._write_df(stream, parsed.select("r.*"), n_records)
-
-    def _write_df(self, stream: _StreamState, df: DataFrame, n_records: int) -> None:
+        df = parsed.select("r.*")
         if stream.version is not None:
-            df = df.withColumn(
-                "_sdc_table_version", F.lit(stream.version).cast("long")
-            )
-        else:
+            df = df.withColumn("_sdc_table_version", F.lit(stream.version).cast("long"))
+        self._write(stream, df, n_records)
+
+    def _write(
+        self, stream: _StreamState, data: DataFrame | pa.Table, n_records: int
+    ) -> None:
+        if stream.version is None:
             stream.wrote_untagged = True
         if self.upsert_on_keys and stream.key_properties:
-            self.writer.upsert(df, stream.name, stream.key_properties)
+            self.writer.upsert(data, stream.name, stream.key_properties)
         else:
-            self.writer.append(df, stream.name)
+            self.writer.append(data, stream.name)
         stream.records_written += n_records
         stream.batches_written += 1
 
-    def _to_frame(self, stream: _StreamState) -> DataFrame:
-        """The buffer as a DataFrame: coercion, the Arrow table and its
-        hand-off to Spark. Leaves the buffer untouched."""
-        schema = stream.schema
+    def _to_table(self, stream: _StreamState) -> pa.Table:
+        """The buffer as one Arrow table under the stream schema, plus
+        ``_sdc_extracted_at`` when the writer stamps metadata and
+        ``_sdc_table_version`` when the stream's version is known.
+        Leaves the buffer untouched."""
         # column by column, as from_pylist splits rows itself: no coerced
         # dict per record, so a drain leaves the cyclic GC few new
         # objects to track (its full passes cost ~0.1 s at this heap size)
         buffer = stream.buffer
         table = pa.Table.from_arrays(
-            [[_coerce_value(r.get(f.name), f.dataType, f.name) for r in buffer]
-             for f in schema.fields],
+            [[_coerce_value(r.get(f.name), f.dataType, f.name, f.nullable) for r in buffer]
+             for f in stream.schema.fields],
             schema=stream.arrow_schema,
         )
         add_meta = getattr(self.writer.config, "add_record_metadata", False)
-        stamp = add_meta and any(e is not None for e in stream.extracted)
-        if stamp:
-            # attach per-record time_extracted; records lacking it get
-            # the drain time (the SDK's `time_extracted or now` default)
+        if add_meta and any(e is not None for e in stream.extracted):
+            # per-record time_extracted; the writer gives records lacking
+            # it the drain time. timestamp[us, UTC] reads the naive UTC
+            # values as UTC
             extracted = [
                 _parse_timestamp(e) if isinstance(e, str) else None
                 for e in stream.extracted
             ]
-            # timestamp[us, UTC] reads the naive UTC values as UTC
             table = table.append_column(
                 "_sdc_extracted_at", pa.array(extracted, pa.timestamp("us", tz="UTC"))
             )
-            schema = StructType(
-                [*schema.fields, StructField("_sdc_extracted_at", TimestampType(), True)]
+        if stream.version is not None:
+            table = table.append_column(
+                "_sdc_table_version",
+                pa.repeat(pa.scalar(stream.version, pa.int64()), len(buffer)),
             )
-        # a pa.Table always crosses to the JVM as Arrow record batches
-        df = self.spark.createDataFrame(table, schema=schema)
-        if stamp:
-            df = df.withColumn(
-                "_sdc_extracted_at",
-                F.coalesce(F.col("_sdc_extracted_at"), F.current_timestamp()),
-            )
-        return df
+        return table
 
-    def _commit(self, stream: _StreamState, df: DataFrame) -> None:
-        self._write_df(stream, df, len(stream.buffer))
+    def _commit(self, stream: _StreamState, table: pa.Table) -> None:
+        self._write(stream, table, len(stream.buffer))
         # cleared only AFTER the write succeeds
         stream.buffer = []
         stream.extracted = []
@@ -412,11 +418,14 @@ class SingerTarget:
         only when every write has finished. Streams with empty buffers
         are skipped.
 
-        This thread builds each stream's DataFrame in turn (coercion,
-        Arrow table, hand-off: the CPU-bound Python part, which threads
-        would only contend for under the GIL) and hands its write to a
-        pool of up to ``_DRAIN_THREADS`` threads, so the Spark write
-        jobs overlap with each other and with the next stream's build.
+        This thread builds each stream's Arrow table in turn (coercion
+        and conversion: the CPU-bound Python part, which threads would
+        only contend for under the GIL) and hands its write to a pool of
+        up to ``_DRAIN_THREADS`` threads. A parquet-mode append is one
+        ``pq.write_table``, which releases the GIL, so the file writes
+        overlap with each other and with the next stream's build; a
+        write that goes through Spark overlaps its Spark job the same
+        way.
         Each stream is written by one thread, so its records still reach
         the writer in arrival order. Each write runs under a copy of the
         caller's Spark local properties (job group, scheduler pool) taken
@@ -437,12 +446,12 @@ class SingerTarget:
         with ThreadPoolExecutor(max_workers=min(len(pending), _DRAIN_THREADS)) as pool:
             for stream in pending:
                 try:
-                    df = self._to_frame(stream)
+                    table = self._to_table(stream)
                 except Exception as e:
                     outcomes.append(e)
                     continue
                 commit = inheritable_thread_target(self.spark)(self._commit)
-                outcomes.append(pool.submit(commit, stream, df))
+                outcomes.append(pool.submit(commit, stream, table))
         for outcome in outcomes:  # the order given
             if isinstance(outcome, Exception):
                 raise outcome
@@ -460,7 +469,10 @@ def demux_singer_file(
 
     Returns one DataFrame per stream, parsed executor-side via
     ``from_json`` — the 100 TB path: no driver buffering, text-splitting
-    and JSON parsing scale with executors.
+    and JSON parsing scale with executors. Lines that are not RECORDs
+    of the stream, or carry no JSON ``record``, are skipped; a payload
+    that does not fit the stream schema fails the job that reads it
+    (FAILFAST, as BATCH parses), instead of landing as a row of NULLs.
     """
     text = spark.read.text(path)
     if schemas is None:
@@ -487,11 +499,7 @@ def demux_singer_file(
             .where((F.col("m.type") == "RECORD") & (F.col("m.stream") == stream))
             # drops RECORD lines that are not JSON or carry no record
             .where(payload.isNotNull())
-            .select(F.from_json(payload, struct).alias("r"))
-            # drops nothing: under PERMISSIVE parsing a payload that does
-            # not fit the schema (a mistyped value, a non-object) parses
-            # to a struct with NULL fields, never to NULL, and is kept
-            .where(F.col("r").isNotNull())
+            .select(F.from_json(payload, struct, {"mode": "FAILFAST"}).alias("r"))
             .select("r.*")
         )
         out[stream] = records

@@ -12,11 +12,19 @@ on Spark's writer stack:
   load-or-create table (sinks.py:88-97)  | ensure_table(): CREATE IF ABSENT,
                                          |   with optional partition spec
                                          |   (reference creates unpartitioned)
-  table.append(arrow) (sinks.py:100)     | df.writeTo(...).append() /
-                                         |   write.parquet(mode=append)
+  table.append(arrow) (sinks.py:100)     | parquet mode: the Arrow table is
+                                         |   written in-process by pyarrow
+                                         |   as one file (no Spark job);
+                                         |   otherwise df.writeTo(...)
+                                         |   .append() / write.parquet
   key_properties accepted, unused        | upsert(): MERGE-style last-wins
     (sinks.py:25,31 — append-only)       |   (engine extension)
   ACTIVATE_VERSION ignored (target.py:6) | overwrite(): full refresh
+
+``append`` and ``upsert`` take a Spark DataFrame or a ``pyarrow.Table``
+(what the Singer target drains). A table that cannot take the file
+path below becomes ``spark.createDataFrame(table)`` and is written by
+Spark like any DataFrame.
 
 Two physical modes behind one API:
   - **iceberg**: when an Iceberg Spark catalog is on the classpath the
@@ -24,7 +32,12 @@ Two physical modes behind one API:
   - **parquet** (default here): a plain parquet warehouse directory
     `{warehouse}/{namespace}/{stream}/` — the local test environment
     ships no Iceberg runtime jar, and correctness must not depend on
-    network jars. Upsert/overwrite rewrite via a temp dir + directory
+    network jars. An Arrow-table append to an unpartitioned, unsorted
+    table without record metadata is the reference's in-process
+    ``table.append``: pyarrow writes one file under a hidden temp name
+    in the table directory and one ``os.rename`` publishes it, so a
+    reader sees the whole batch or none of it. Every other append is a
+    Spark write job. Upsert/overwrite rewrite via a temp dir + directory
     swap (Iceberg gives real snapshot atomicity; the parquet fallback
     is best-effort and documents that). A parquet upsert unions the
     table's rows with the batch and keeps the newest row per key in a
@@ -45,6 +58,8 @@ import uuid
 from collections.abc import Iterator
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
@@ -149,8 +164,9 @@ class StreamWriter:
         A12): extracted/received/batched timestamps, soft-delete marker,
         batch sequence, and table version. Columns the source already
         attached (e.g. ``_sdc_table_version`` from ACTIVATE_VERSION
-        tagging, ``_sdc_extracted_at`` from a RECORD's time_extracted)
-        are passed through untouched."""
+        tagging) are passed through untouched, except that a NULL
+        ``_sdc_extracted_at`` (a RECORD without time_extracted) gets the
+        drain time: the SDK's ``time_extracted or now`` default."""
         if not self.config.add_record_metadata:
             return df
         seq = next(self._batch_seq)
@@ -166,6 +182,11 @@ class StreamWriter:
         for name, col in defaults.items():
             if name not in existing:
                 df = df.withColumn(name, col)
+        if "_sdc_extracted_at" in existing:
+            df = df.withColumn(
+                "_sdc_extracted_at",
+                F.coalesce(F.col("_sdc_extracted_at"), F.current_timestamp()),
+            )
         return df
 
     # -- writes ----------------------------------------------------------
@@ -186,11 +207,32 @@ class StreamWriter:
             df = df.repartitionByRange(*cols)
         return df.sortWithinPartitions(*cols)
 
-    def append(self, df: DataFrame, stream: str) -> None:
+    def _frame(self, data: DataFrame | pa.Table) -> DataFrame:
+        if isinstance(data, pa.Table):
+            # a pa.Table crosses to the JVM as Arrow record batches
+            return self.spark.createDataFrame(data)
+        return data
+
+    def append(self, data: DataFrame | pa.Table, stream: str) -> None:
         """Append-only batch commit (reference sinks.py:88-100: load-or-
         create then table.append). Duplicate keys are persisted as-is,
-        matching the reference's unused key_properties."""
-        df = self._clustered(self._with_metadata(df))
+        matching the reference's unused key_properties.
+
+        A ``pa.Table`` bound for a parquet table with no partitioning,
+        sort order or record metadata is written by ``_append_file``,
+        with no Spark job; anything else goes through Spark."""
+        if (
+            isinstance(data, pa.Table)
+            and self.mode == "parquet"
+            and not (
+                self.config.partition_by
+                or self.config.sort_by
+                or self.config.add_record_metadata
+            )
+        ):
+            self._append_file(data, stream)
+            return
+        df = self._clustered(self._with_metadata(self._frame(data)))
         if self.mode == "iceberg":
             ident = self.table_identifier(stream)
             if not self.table_exists(stream):
@@ -204,6 +246,25 @@ class StreamWriter:
             if self.config.partition_by:
                 writer = writer.partitionBy(*self.config.partition_by)
             writer.parquet(self.table_path(stream))
+
+    def _append_file(self, table: pa.Table, stream: str) -> None:
+        """Write ``table`` as one new parquet file of the table, in
+        process. The file is written under a dot-prefixed temp name and
+        published by one rename: Spark's file index skips hidden names
+        and ``_parquet_files`` yields only ``*.parquet``, so no reader
+        ever sees a partly written file. A failed write or rename leaves
+        nothing behind."""
+        path = self.table_path(stream)
+        os.makedirs(path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.snappy.parquet"
+        tmp = os.path.join(path, f".{name}.tmp")
+        try:
+            pq.write_table(table, tmp, compression="snappy")
+            os.rename(tmp, os.path.join(path, name))
+        except BaseException:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
+            raise
 
     def _create(self, df: DataFrame, ident: str) -> None:
         """Iceberg CREATE from the first batch, with the configured
@@ -275,13 +336,15 @@ class StreamWriter:
         )
         return stmts
 
-    def upsert(self, df: DataFrame, stream: str, key_properties: list[str]) -> None:
+    def upsert(
+        self, data: DataFrame | pa.Table, stream: str, key_properties: list[str]
+    ) -> None:
         """Last-write-wins merge on the Singer key_properties — the
         engine extension fixing the reference's silent append-only
         handling of keyed streams (reference sinks.py:25,100)."""
         if not key_properties:
             raise ValueError("upsert requires non-empty key_properties")
-        df = self._with_metadata(df).withColumn(
+        df = self._with_metadata(self._frame(data)).withColumn(
             "_upsert_seq", F.monotonically_increasing_id()
         )
         if self.mode == "iceberg":

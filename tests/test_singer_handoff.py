@@ -1,5 +1,5 @@
-"""The Singer target's hand-off to Spark: each drained buffer becomes one
-``pyarrow.Table`` (``sources/singer.py::_drain``).
+"""The Singer target's hand-off to the writer: each drained buffer becomes
+one ``pyarrow.Table`` (``sources/singer.py::_drain``).
 
 pyarrow accepts values the row-wise ``createDataFrame(list[dict])``
 verifier rejected, and the other way round, so ``_coerce_value`` carries
@@ -83,22 +83,27 @@ def _json_rows(df) -> list[str]:
 
 
 class _CaptureWriter:
-    """Stands in for StreamWriter: keeps each appended batch's rows."""
+    """Stands in for StreamWriter: keeps each appended table's type and
+    its rows, as Spark reads them from the table."""
 
     config = SimpleNamespace(add_record_metadata=False)
 
-    def __init__(self, collect: bool = True):
+    def __init__(self, spark, collect: bool = True):
+        self.spark = spark
         self.collect = collect
         self.batches: list[list[str]] = []
+        self.types: list[type] = []
 
-    def append(self, df, stream):
-        self.batches.append(_json_rows(df) if self.collect else [])
+    def append(self, table, stream):
+        self.types.append(type(table))
+        rows = _json_rows(self.spark.createDataFrame(table)) if self.collect else []
+        self.batches.append(rows)
 
 
 def _drain(spark, schema: StructType, records: list[dict], collect: bool = True):
     """Feed ``records`` through a target and drain them at STATE;
     returns the written rows (as JSON), or RAISES."""
-    writer = _CaptureWriter(collect)
+    writer = _CaptureWriter(spark, collect)
     target = SingerTarget(spark, writer)
     # nested temporal slots have no JSON-Schema spelling: set the schema
     target.streams["s"] = _StreamState("s", schema, [])
@@ -192,7 +197,7 @@ USERS = {
     ],
 )
 def test_rejected_values_fail_the_drain_and_keep_the_buffer(spark, record):
-    target = SingerTarget(spark, _CaptureWriter(collect=False))
+    target = SingerTarget(spark, _CaptureWriter(spark, collect=False))
     target.process_line(json.dumps(USERS))
     target.process_line(json.dumps({"type": "RECORD", "stream": "users", "record": record}))
     with pytest.raises((TypeError, ValueError, OverflowError)):
@@ -212,21 +217,13 @@ def test_json_array_in_object_slot_is_positional(spark):
     assert _drain(spark, schema, [{"id": 1, "s": ["x"]}], collect=False) == RAISES
 
 
-def test_each_drain_hands_spark_one_arrow_table(spark, monkeypatch):
-    calls = []
-    create = spark.createDataFrame
-
-    def spy(data, *args, **kwargs):
-        calls.append(type(data))
-        return create(data, *args, **kwargs)
-
-    monkeypatch.setattr(spark, "createDataFrame", spy)
-    writer = _CaptureWriter()
+def test_each_drain_hands_spark_one_arrow_table(spark):
+    writer = _CaptureWriter(spark)
     target = SingerTarget(spark, writer, max_batch_size=3)
     target.process_line(json.dumps(USERS))
     for i in range(5):  # one full-buffer drain, then one at STATE
         target.process_line(json.dumps(
             {"type": "RECORD", "stream": "users", "record": {"id": i, "score": i}}))
     target.process_line(json.dumps({"type": "STATE", "value": {}}))
-    assert calls == [pa.Table, pa.Table]
+    assert writer.types == [pa.Table, pa.Table]
     assert [len(b) for b in writer.batches] == [3, 2]

@@ -1,7 +1,7 @@
 """Pins for the ingest paths' shape: one window per parquet upsert, one
-drain path (pool threads in the caller's job group), BATCH's loud
-failure on lines that do not fit the stream schema, and the CLI's quiet
-stderr."""
+drain path (pool threads in the caller's job group), the loud failure
+of BATCH and of the bulk demux on lines that do not fit the stream
+schema, and the CLI's quiet stderr."""
 
 from __future__ import annotations
 
@@ -12,7 +12,7 @@ import uuid
 import pytest
 
 import target_iceberg_spark.__main__ as cli
-from target_iceberg_spark.sources.singer import SingerTarget
+from target_iceberg_spark.sources.singer import SingerTarget, demux_singer_file
 from target_iceberg_spark.writer import StreamWriter, WriterConfig
 
 SCHEMA = {
@@ -76,9 +76,13 @@ def test_parquet_upsert_plans_one_window(spark, writer):
 # -- one drain path -----------------------------------------------------------
 
 @pytest.mark.parametrize("trigger", ["state", "size"])
-def test_single_stream_drain_runs_in_the_callers_job_group(spark, writer, trigger):
+def test_single_stream_drain_runs_in_the_callers_job_group(spark, tmp_path, trigger):
     """A 1-stream STATE and a size-triggered drain write on a pool
-    thread; the write still carries the caller's job group."""
+    thread; the write still carries the caller's job group. The table
+    is partitioned, so Spark writes it (a file append starts no job)."""
+    writer = StreamWriter(
+        spark, WriterConfig(warehouse=str(tmp_path), partition_by=("id",)), mode="parquet"
+    )
     target = SingerTarget(spark, writer, max_batch_size=2)
     target.process_line(json.dumps(SCHEMA))
     target.process_line(_record(id=1, name="a"))
@@ -141,6 +145,24 @@ def test_batch_with_a_bad_line_still_commits_buffered_records(spark, writer, tmp
     assert [r["id"] for r in writer.read("users").collect()] == [100]
     assert target.streams["users"].records_written == 1
     assert states == []
+
+
+# -- bulk demux: the same malformed-record policy ----------------------------
+
+def test_demux_fails_loudly_on_a_record_that_does_not_fit(spark, tmp_path):
+    """A RECORD whose payload does not fit the stream schema fails the
+    read, as a BATCH line does, instead of landing as a row of NULLs;
+    lines that are not Singer RECORDs are still skipped."""
+    good = [json.dumps(SCHEMA), "not json", STATE, _record(id=1, name="a")]
+    p = tmp_path / "good.jsonl"
+    p.write_text("\n".join(good) + "\n")
+    assert [r["id"] for r in demux_singer_file(spark, str(p))["users"].collect()] == [1]
+
+    p = tmp_path / "bad.jsonl"
+    p.write_text("\n".join([*good, _record(id="x", name="b")]) + "\n")
+    users = demux_singer_file(spark, str(p))["users"]
+    with pytest.raises(Exception, match="MALFORMED_RECORD_IN_PARSING"):
+        users.collect()
 
 
 # -- CLI ----------------------------------------------------------------------

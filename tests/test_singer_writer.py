@@ -650,10 +650,16 @@ def test_concurrent_drains_get_distinct_batch_sequences(spark, tmp_path):
     assert sorted(seqs.values()) == [1, 2, 3]
 
 
-def test_concurrent_drains_run_in_the_callers_job_group(spark, writer):
+def test_concurrent_drains_run_in_the_callers_job_group(spark, tmp_path):
     """Drain threads inherit the caller's Spark local properties: the
     write jobs of a 3-stream STATE belong to the caller's job group, so
-    cancelling or tracing that group covers them."""
+    cancelling or tracing that group covers them. A sorted table is
+    written by Spark (a plain append starts no job, see
+    test_singer_file_append.py); these one-column streams cannot be
+    partitioned by their only column."""
+    writer = StreamWriter(
+        spark, WriterConfig(warehouse=str(tmp_path), sort_by=("id",)), mode="parquet"
+    )
     target = SingerTarget(spark, writer)
     _buffer_three_streams(target)
     sc = spark.sparkContext
