@@ -34,9 +34,8 @@ OPTIMIZATION_r14.md — the r13 driver run overran its own 2100 s
 budget by ~900 s and survived only because the outer timeout was
 larger). Through round 13 the protocol was 4 executions per query:
 a cold sweep, then a forward warm sweep that ran each query TWICE
-(an untimed "restore" run to re-establish codegen/JIT state evicted
-since the cold sweep, then the timed steady-state sample), then a
-reverse warm sweep timing a single run. Round 14 FUSES the cold
+(an untimed "restore" run, then the timed steady-state sample), then
+a reverse warm sweep timing a single run. Round 14 FUSES the cold
 sweep and the forward warm sweep: each query runs cold (timed as
 cold) and then immediately again (timed as the sweep-1 warm sample)
 — the warm sample is still the second of two back-to-back
@@ -44,12 +43,24 @@ executions of the same plan, exactly what the old restore+timed
 pair measured, but the separate restore execution (and its wall
 clock) is gone: 3 executions per query instead of 4, ~20-25% of
 total wall cut with per-query semantics intact. The reverse sweep
-is unchanged (single timed run; its recompile padding loses the
-per-query min to the clean sweep-1 sample, so it still vetoes
-sweep-1 contention inflation — the only job min-of-sweeps asks of
-it). Both sweep columns are kept in the detail artifact, so the
-sweep-to-sweep spread — the session-noise error bar — is documented
-per run instead of discovered across rounds.
+is unchanged (single timed run; it vetoes sweep-1 contention
+inflation — the only job min-of-sweeps asks of it). Both sweep
+columns are kept in the detail artifact, so the sweep-to-sweep
+spread — the session-noise error bar — is documented per run
+instead of discovered across rounds.
+
+GENERATED CODE. Every run of a query needs its generated classes;
+a class missing from Spark's generated-code cache is compiled with
+Janino first, inside the timed window. With Spark's default cache
+of 100 classes, a full sweep (about 5.3k distinct classes) evicted
+each query's classes long before the next sweep reached it, so a
+reverse pass over the registry recompiled ~7.7k classes. session.py
+sizes the cache to the registry, so a query's classes stay cached
+wherever its next run falls (the same reverse pass: 247 compiles).
+`queries_compiles_sweep1` and `queries_compiles_sweep2` count the
+classes each timed sample compiled: a warm sample normally compiles
+none, and a nonzero count marks either eviction or a plan that
+generates fresh code on every run.
 
 The whole run is WALL-CLOCK BUDGETED: $SPARK_GRAFT_BENCH_BUDGET_SEC
 (default 2100) bounds the process. Budget gates (round 14): the
@@ -137,7 +148,7 @@ def main() -> None:
     cpus = int(cpus_env)
 
     from target_iceberg_spark.plans import all_specs
-    from target_iceberg_spark.session import get_spark
+    from target_iceberg_spark.session import codegen_compiles, get_spark
 
     spark = get_spark("engine-bench")
     specs = all_specs()
@@ -164,7 +175,7 @@ def main() -> None:
         specs = {n: specs[n] for n in only}
     specs = {n: s for n, s in specs.items() if s.bench}
 
-    def run_once(spec, gc: bool = True) -> tuple[float, float]:
+    def run_once(spec, gc: bool = True) -> tuple[float, float, int]:
         # Full JVM GC before a timed run (outside the timed window):
         # keeps one query's garbage from being charged to the next
         # query's timing (round-4 post-mortem; measured 0.13-0.32 s per
@@ -176,17 +187,20 @@ def main() -> None:
         # discards whenever the reverse sweep — full GC discipline —
         # runs). Measured ~130 s of the 415 s per-run bookkeeping
         # overhead, round-14 budget fix.
-        # Returns (total, build): the timed total covers the builder and
-        # the noop write; build is the builder's share of it (table
-        # resolution, eager checkpoints and any job started before the
-        # DataFrame is returned).
+        # Returns (total, build, compiles): the timed total covers the
+        # builder and the noop write; build is the builder's share of it
+        # (table resolution, eager checkpoints and any job started before
+        # the DataFrame is returned); compiles counts the generated-code
+        # classes the run compiled, read outside the timed window.
         if gc:
             spark._jvm.System.gc()
+        c0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         df = spec.builder(spark, sf_dir)
         t1 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3), round(t1 - t0, 3)
+        total = round(time.perf_counter() - t0, 3)
+        return total, round(t1 - t0, 3), codegen_compiles(spark) - c0
 
     times: dict[str, float] = {}
     failed_set: set[str] = set()
@@ -199,6 +213,7 @@ def main() -> None:
     # measured (see module docstring). ------------------------------
     sweep1: dict[str, float] = {}
     sweep1_build: dict[str, float] = {}
+    sweep1_compiles: dict[str, int] = {}
     for name, spec in sorted(specs.items()):
         try:
             times[name] = run_once(spec)[0]
@@ -208,7 +223,8 @@ def main() -> None:
             print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
             continue
         try:
-            sweep1[name], sweep1_build[name] = run_once(spec, gc=False)
+            sweep1[name], sweep1_build[name], sweep1_compiles[name] = run_once(
+                spec, gc=False)
         except Exception as exc:
             failed_set.add(name)
             print(f"bench: {name} FAILED (warm): {exc}", file=sys.stderr)
@@ -221,6 +237,7 @@ def main() -> None:
     # the remaining budget with a 120 s shutdown margin; else fall
     # back to sweep-1 samples (never deflates a reported time). -----
     sweep2: dict[str, float] = {}
+    sweep2_compiles: dict[str, int] = {}
     sweep2_skipped = None
     elapsed = time.perf_counter() - t_start
     remaining = budget_sec - elapsed
@@ -238,7 +255,7 @@ def main() -> None:
             if name in failed_set:
                 continue
             try:
-                sweep2[name] = run_once(spec)[0]
+                sweep2[name], _, sweep2_compiles[name] = run_once(spec)
             except Exception as exc:
                 failed_set.add(name)
                 print(f"bench: {name} FAILED (warm): {exc}", file=sys.stderr)
@@ -403,7 +420,10 @@ def main() -> None:
         "queries_warm_sweep1": sweep1,
         # builder share of each sweep-1 sample (the rest is execution)
         "queries_build_sweep1": sweep1_build,
+        # generated-code classes each sample compiled (cache misses)
+        "queries_compiles_sweep1": sweep1_compiles,
         "queries_warm_sweep2": sweep2,
+        "queries_compiles_sweep2": sweep2_compiles,
     }
     if sweep2_skipped is not None:
         detail["sweep2_skipped"] = sweep2_skipped
@@ -414,7 +434,8 @@ def main() -> None:
     print(f"bench: per-query detail written to {detail_path}", file=sys.stderr)
     print(
         f"bench: warm sweeps {' / '.join(str(t) + 's' for t in sweep_totals)} "
-        f"(spread {spread_pct}%), min-total {warm_total}s",
+        f"(spread {spread_pct}%), min-total {warm_total}s; classes compiled "
+        f"{sum(sweep1_compiles.values())} / {sum(sweep2_compiles.values())}",
         file=sys.stderr,
     )
 

@@ -19,6 +19,23 @@ Scale notes (100 TB / 1000-executor design, tested on local[32]):
     TIMESTAMP(NANOS) parquet columns, which Spark 4 otherwise refuses
     to read; sources/tables.py converts the raw long back to a
     timestamp_ntz column.
+  - codegen.cache.maxEntries 8192: the generated-code cache keeps each
+    compiled class, keyed by its source text. Spark's default of 100 is
+    smaller than one short 9-query rotation (101 classes), so every
+    warm rotation recompiled about 30 of them with Janino; the 404
+    benched queries need about 5.3k distinct classes at sf0.01. Guava
+    splits the cache into 4 segments that evict separately, hence
+    ~1.5x headroom. The cache holds only classes that were compiled,
+    so the memory it pins (metaspace) follows the working set, not the
+    limit: after a forward and a reverse pass over the registry it
+    held 5555 classes in 245 MB of metaspace, against 208 MB with the
+    default cache.
+  - python.sql.dataFrameDebugging off: PySpark otherwise records the
+    Python call site of every DataFrame/Column call, ~4 py4j round
+    trips each, for the DataFrame query context of an error. With it
+    off, an error keeps its message and error class, but no longer
+    names the Python file and line of the call that built the failing
+    expression.
 """
 
 from __future__ import annotations
@@ -38,10 +55,17 @@ ENGINE_CONF: dict[str, str] = {
     # Small local test inputs: AQE coalesces upward-sized shuffles anyway.
     "spark.sql.shuffle.partitions": "64",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
+    # Generated-code cache sized to the whole registry (see Scale notes).
+    "spark.sql.codegen.cache.maxEntries": "8192",
+    # No Python call-site capture around every DataFrame/Column call.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 # Conf keys that are runtime-settable and must hold even when the caller
-# (e.g. the verification driver) built the SparkSession itself.
+# (e.g. the verification driver) built the SparkSession itself. The
+# codegen cache size and the call-site switch are static (the first is
+# read once per JVM, the second once per Python process), so they hold
+# only for sessions built by get_spark, not for a foreign driver session.
 RUNTIME_CONF: tuple[str, ...] = (
     "spark.sql.session.timeZone",
     "spark.sql.legacy.parquet.nanosAsLong",
@@ -58,6 +82,13 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
             pass  # static conf on this build — session must be pre-configured
     ensure_package_shipped(spark)
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes compiled by Janino in this JVM so far: each is a miss of
+    the generated-code cache sized by ``spark.sql.codegen.cache.maxEntries``."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 _SHIPPED_CONTEXTS: set[int] = set()

@@ -1765,85 +1765,6 @@ def test_streaming_asof_tolerance_state_carries_and_never_regresses(
     # it correctly wins (event-time latest); see the equivalence test
 
 
-def test_transform_with_state_running_topk_equals_batch(
-    spark, sf_smoke, events_dir, tmp_path
-):
-    """Spark 4 transformWithStateInPandas leaderboard: after draining
-    the bounded stream, each group's final-epoch top-10 must match the
-    batch cumulative ranking (same member set, same totals). Skips
-    when the environment lacks the `protobuf` package the new API's
-    state-server protocol requires (same env-gate class as the
-    Iceberg-jar e2e)."""
-    import pytest
-
-    from target_iceberg_spark.streaming.tws import (
-        streaming_running_topk,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip(
-            "transformWithState needs the protobuf package "
-            "(pyspark proto wire protocol); not in this container"
-        )
-
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(conf_key, None)
-    spark.conf.set(
-        conf_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_event_stream(spark, events_dir)
-        q = (
-            streaming_running_topk(
-                stream.select("event_type", "user_id", "value")
-            )
-            .writeStream.format("memory")
-            .queryName("tws_topk")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        if old is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, old)
-    rows = spark.table("tws_topk").collect()
-    assert rows, "no leaderboard emitted"
-    final = {}
-    for r in rows:
-        cur = final.setdefault(r["event_type"], {})
-        if r["epoch"] >= cur.get("_epoch", 0):
-            if r["epoch"] > cur.get("_epoch", 0):
-                cur.clear()
-                cur["_epoch"] = r["epoch"]
-            cur[r["rank"]] = (r["user_id"], r["total"])
-
-    ev = load_table(spark, sf_smoke, "events")
-    batch = (
-        ev.groupBy("event_type", "user_id")
-        .agg(F.sum("value").alias("total"))
-        .collect()
-    )
-    import collections
-
-    by_type = collections.defaultdict(list)
-    for r in batch:
-        by_type[r["event_type"]].append((r["user_id"], r["total"]))
-    assert set(final) == set(by_type)
-    for etype, board in final.items():
-        want = sorted(by_type[etype], key=lambda t: (-t[1], t[0]))[:10]
-        got = [board[i] for i in sorted(k for k in board if k != "_epoch")]
-        assert [u for u, _ in got] == [u for u, _ in want], etype
-        for (gu, gt), (wu, wt) in zip(got, want):
-            assert abs(gt - wt) < 1e-6, (etype, gu, gt, wt)
-
-
 # -- streaming bloom-gated dedup (round-8 twin) ------------------------------
 
 
