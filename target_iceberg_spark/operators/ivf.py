@@ -37,6 +37,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from target_iceberg_spark.bounded import bounded_collect
+from target_iceberg_spark.cache import cache_root
 from target_iceberg_spark.functions.vectors import cosine
 
 
@@ -89,28 +90,6 @@ class IVFIndex:
     centroids: np.ndarray
 
 
-def index_root() -> str:
-    """Root directory for persisted IVF indexes.
-
-    Resolution order:
-      1. ``$SPARK_GRAFT_IVF_ROOT`` — on a cluster this should point INTO
-         THE WAREHOUSE (shared filesystem / object store) so every
-         executor and every driver sees the same index, exactly like any
-         other table the engine writes.
-      2. Default: a per-user cache dir (``$XDG_CACHE_HOME`` or
-         ``~/.cache``) created with mode 0700 — never the world-writable
-         shared temp dir, where another local user could pre-create a
-         poisoned index at the predictable path.
-    """
-    root = os.environ.get("SPARK_GRAFT_IVF_ROOT")
-    if not root:
-        from target_iceberg_spark.cache import cache_root
-
-        return cache_root("ivf")
-    os.makedirs(root, mode=0o700, exist_ok=True)
-    return root
-
-
 def corpus_fingerprint(source: str) -> str:
     """Content identity of the corpus at ``source`` (file or directory
     of part files): md5 over every data file's bytes, folded in sorted
@@ -155,7 +134,7 @@ def index_cache_path(
     corpus or changed quantizer invalidates the cache on any machine."""
     fp = corpus_key if corpus_key is not None else corpus_fingerprint(source_file)
     key = hashlib.md5(f"{fp}|{vec_col}|{k}|{seed}".encode()).hexdigest()[:16]
-    return os.path.join(index_root(), key)
+    return os.path.join(cache_root("ivf"), key)
 
 
 def _prune_stale_indexes(keep_path: str, source: str) -> None:

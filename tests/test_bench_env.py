@@ -29,8 +29,6 @@ finally:
     [
         ("SPARK_GRAFT_BENCH_BUDGET_SEC", "ten"),
         ("SPARK_GRAFT_BENCH_BUDGET_SEC", "nan"),
-        ("SPARK_GRAFT_SPREAD_PCT", "ten"),
-        ("SPARK_GRAFT_SPREAD_PCT", "-1"),
         ("SPARK_GRAFT_CPUS", "ten"),
     ],
 )

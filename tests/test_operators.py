@@ -364,6 +364,20 @@ def test_ivf_persisted_index_roundtrip(spark, sf_smoke, tmp_path):
     ]
 
 
+def test_ivf_index_path_lives_under_private_cache_root(monkeypatch, tmp_path):
+    """Persisted IVF indexes go under the cache root's `ivf` directory,
+    created owner-only (0700)."""
+    import os
+    import stat
+
+    from target_iceberg_spark.operators.ivf import index_cache_path
+
+    monkeypatch.setenv("SPARK_GRAFT_CACHE_ROOT", str(tmp_path))
+    path = index_cache_path("unused.parquet", "embedding", k=8, seed=7, corpus_key="k")
+    assert os.path.dirname(path) == str(tmp_path / "ivf")
+    assert stat.S_IMODE(os.stat(tmp_path / "ivf").st_mode) == 0o700
+
+
 def test_embedding_band_bits_shrink_candidates_superlinearly(spark, sf_smoke):
     """THE scale property of banded sign-LSH: adding 2 bits per band
     (4x more buckets) must shrink per-band candidate pairs by well more

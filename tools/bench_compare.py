@@ -9,9 +9,11 @@ session noise before anyone stares at 300 numbers.
 Reports: common-query warm totals and ratio, queries slower than
 --threshold x (ignoring sub---min-abs absolute times, where ratios
 are noise), queries that improved by the same margin, and adds/drops.
+Within one run, the queries that moved most between its two warm
+sweeps are a sort over `queries_warm_sweep1` and `queries_warm_sweep2`.
 Follow-up for anything flagged: `python bench.py --only q1,q2` in a
 fresh JVM (isolated cost unchanged => session noise; see bench.py's
-methodology notes).
+module docstring).
 """
 
 from __future__ import annotations
